@@ -589,7 +589,7 @@ object ExtQueries {
 
   /** The declared pair family's band-bucket occupancy cap (r14): every
     * declared query riding the 2-row-band candidate channel passes this
-    * to [[Dedup.bandedCandidates]]-backed APIs, and the oracle twins
+    * to the capped band-channel APIs of [[Dedup]], and the oracle twins
     * mirror it through [[cappedBandCte]]. 64 = the probe_near_dups /
     * containment_stratified precedent (r13: 225.8 → 74.1 s at sf10 with
     * identical output); the CapKnob adjudication for the pair channel

@@ -249,15 +249,6 @@ object Corpus {
     shingleHashes(docs, k).distinct()
       .groupBy("h").agg(count(lit(1)).as("n_docs"))
 
-  /** [[spanCounts]] over a precomputed DISTINCT (doc_id, h) k-shingle
-    * store slice — the store probe form (r17): the store rows are a
-    * per-document pure function, so a doc-predicate slice of the store
-    * is exactly `shingleHashes(those docs).distinct()` without
-    * re-tokenizing the batch.
-    */
-  def spanCountsFromHashes(sh: DataFrame): DataFrame =
-    sh.groupBy("h").agg(count(lit(1)).as("n_docs"))
-
   /** Fold a batch's [[spanCounts]] into the persisted store: union +
     * re-sum — associative and commutative, the [[graft.ext.Sketches]]
     * merge discipline.

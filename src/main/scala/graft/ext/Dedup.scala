@@ -130,25 +130,6 @@ object Dedup {
     */
   val Perms: Seq[(Long, Long)] = perms(SigCount)
 
-  /** X4 — near-duplicate pairs via MinHash + LSH banding on 2-word
-    * shingles, verified by exact Jaccard ≥ `threshold` over the hashed
-    * shingle sets. Output: doc_a, doc_b, jaccard (truncated to 6dp).
-    *
-    * Plan shape: one shuffle to the per-doc aggregates (the window
-    * exchange on doc_id is reused by both the signature and the
-    * shingle-set branch), a banded self-join on packed-long band keys
-    * whose value space grows with the corpus (no bucket densification at
-    * 100×), and a verification join over the candidate pairs. Candidates
-    * are USUALLY band-collisions, orders of magnitude smaller than the
-    * corpus — but a duplicate-saturated crawl (the common case in web
-    * data) makes them corpus-scale, so they are NOT broadcast by
-    * default: the shuffle join never OOMs an executor, and AQE upgrades
-    * it to a runtime broadcast whenever the candidate side measures
-    * small, so the happy case pays nothing for the safety.
-    * `broadcastCandidates = true` is the opt-in assertion (same contract
-    * as [[ngramJaccardBlocked]]'s `broadcastBlocked`) for pipelines that
-    * KNOW their collision volume is bounded and want the hint pinned.
-    */
   /** Hashed shingle rows (doc_id, h): each 2-word shingle md5'd once to
     * its 60-bit base hash — the shared input of [[minhashBands]] and
     * [[shingleSets]].
@@ -195,37 +176,37 @@ object Dedup {
   def shingleSets(hr: DataFrame): DataFrame =
     hr.groupBy("doc_id").agg(array_sort(collect_set(col("h"))).as("sh"))
 
-  /** Candidate-frame hint helper: the default leaves the join strategy
-    * to AQE (broadcast at runtime iff the measured size allows); the
-    * opt-in pins the broadcast.
+  /** X4 — near-duplicate pairs via MinHash + LSH banding on 2-word
+    * shingles, verified by exact Jaccard ≥ `threshold` over the hashed
+    * shingle sets. Output: doc_a, doc_b, jaccard (truncated to 6dp).
+    *
+    * Plan shape: one shuffle to the per-doc aggregates (the window
+    * exchange on doc_id is reused by both the signature and the
+    * shingle-set branch), then the band channel of [[bandPairs]]: with
+    * an occupancy cap each band bucket is grouped and verified in place,
+    * without one a banded self-join on packed-long band keys feeds
+    * [[scoredPairs]]. Band values grow with the corpus, so buckets do
+    * not densify at 100×.
     */
-  private def maybeBroadcast(df: DataFrame, pin: Boolean): DataFrame =
-    if (pin) broadcast(df) else df
-
   def nearDupMinhash(docs: DataFrame, threshold: Double = 0.5,
-      broadcastCandidates: Boolean = false,
       maxBandOccupancy: Int = 0): DataFrame =
     nearDupMinhashFromHashes(hashedShingleRows(docs), threshold,
-      broadcastCandidates, maxBandOccupancy = maxBandOccupancy)
+      maxBandOccupancy = maxBandOccupancy)
 
   /** [[nearDupMinhash]] over a precomputed [[hashedShingleRows]] frame.
-    * The hr subtree is consumed SEVERAL times below (both sides of the
-    * banded self-join + the set branch), so a caller that already has hr
-    * materialized — [[Corpus.corpusManifest]] checkpoints one shared
-    * shingle scan — saves that many corpus re-scans.
+    * The hr subtree is consumed SEVERAL times below (the band and the
+    * set branch), so a caller that already has hr materialized —
+    * [[Corpus.corpusManifest]] checkpoints one shared shingle scan —
+    * saves that many corpus re-scans.
     */
   def nearDupMinhashFromHashes(hr: DataFrame, threshold: Double = 0.5,
-      broadcastCandidates: Boolean = false,
       bands: Option[DataFrame] = None,
       sets: Option[DataFrame] = None,
       maxBandOccupancy: Int = 0): DataFrame =
     // |A ∪ B| = |A| + |B| − |A ∩ B| for distinct inputs: one codegen'd
     // two-pointer merge yields exact Jaccard per candidate.
-    bandedScoredPairs(hr, broadcastCandidates, bands, sets, maxBandOccupancy)
-      .withColumn("jaccard", TextOps.trunc6(col("inter") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double")))
-      .where(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
+    verified(bandedScoredPairs(hr, bands, sets, maxBandOccupancy),
+      "jaccard", jaccard, threshold)
 
   /** X4 — CONTAINMENT near-dup: pairs where the smaller document's
     * shingle set is mostly inside the larger's —
@@ -246,25 +227,20 @@ object Dedup {
     * already containment-exact for every candidate surfaced.
     */
   def containmentNearDup(docs: DataFrame, threshold: Double = 0.8,
-      broadcastCandidates: Boolean = false,
       maxBandOccupancy: Int = 0): DataFrame =
     containmentNearDupFromHashes(hashedShingleRows(docs), threshold,
-      broadcastCandidates, maxBandOccupancy = maxBandOccupancy)
+      maxBandOccupancy = maxBandOccupancy)
 
   /** [[containmentNearDup]] over a precomputed [[hashedShingleRows]]
     * frame — the signature-store probe form (see
     * [[nearDupMinhashFromHashes]]).
     */
   def containmentNearDupFromHashes(hr: DataFrame, threshold: Double = 0.8,
-      broadcastCandidates: Boolean = false,
       bands: Option[DataFrame] = None,
       sets: Option[DataFrame] = None,
       maxBandOccupancy: Int = 0): DataFrame =
-    bandedScoredPairs(hr, broadcastCandidates, bands, sets, maxBandOccupancy)
-      .withColumn("containment", TextOps.trunc6(col("inter") /
-        least(size(col("sh_a")), size(col("sh_b"))).cast("double")))
-      .where(col("containment") >= threshold)
-      .select("doc_a", "doc_b", "containment")
+    verified(bandedScoredPairs(hr, bands, sets, maxBandOccupancy),
+      "containment", containment, threshold)
 
   /** Per-document minhash SIGNATURE rows (doc_id, n, sig_idx, sig_val)
     * — the unbanded form of the signature store, with the distinct
@@ -335,15 +311,14 @@ object Dedup {
     *   ensemble trade.
     */
   def containmentNearDupStratified(docs: DataFrame, threshold: Double = 0.8,
-      ratioCut: Double = 2.0, minSigMatches: Int = 2,
-      broadcastCandidates: Boolean = false, strata: Int = 2,
+      ratioCut: Double = 2.0, minSigMatches: Int = 2, strata: Int = 2,
       maxSigOccupancy: Int = 0, maxBandOccupancy: Int = 0): DataFrame =
     // hr feeds three consumers (bands, sig rows, verification sets):
     // checkpoint so tokenize+shingle runs once, the corpusManifest
     // precedent.
     containmentNearDupStratifiedFromHashes(
       Ckpt.ser(hashedShingleRows(docs)), threshold, ratioCut,
-      minSigMatches, broadcastCandidates, strata,
+      minSigMatches, strata,
       maxSigOccupancy = maxSigOccupancy, maxBandOccupancy = maxBandOccupancy)
 
   /** [[containmentNearDupStratified]] over a precomputed — and already
@@ -353,7 +328,7 @@ object Dedup {
     */
   def containmentNearDupStratifiedFromHashes(hr: DataFrame,
       threshold: Double = 0.8, ratioCut: Double = 2.0,
-      minSigMatches: Int = 2, broadcastCandidates: Boolean = false,
+      minSigMatches: Int = 2,
       strata: Int = 2, bands: Option[DataFrame] = None,
       sigRows: Option[DataFrame] = None,
       sets: Option[DataFrame] = None,
@@ -374,14 +349,11 @@ object Dedup {
           maxSigOccupancy = maxSigOccupancy)
           .union(skewCandidates(sized, ratioCut * ratioCut, 1,
             maxSigOccupancy = maxSigOccupancy))
-    scoredPairs(hr,
+    verified(scoredPairs(
       bandedCandidates(bands.getOrElse(minhashBands(hr)), maxBandOccupancy)
         .union(skew),
-      broadcastCandidates, sets)
-      .withColumn("containment", TextOps.trunc6(col("inter") /
-        least(size(col("sh_a")), size(col("sh_b"))).cast("double")))
-      .where(col("containment") >= threshold)
-      .select("doc_a", "doc_b", "containment")
+      sets.getOrElse(shingleSets(hr))),
+      "containment", containment, threshold)
   }
 
   /** The permissive skewed-size channel of
@@ -448,22 +420,102 @@ object Dedup {
 
   /** Shared verification core of the minhash family: banded candidate
     * generation + exact sorted-set intersection, leaving the similarity
-    * FORMULA (Jaccard / containment) to the caller. Returns
-    * (doc_a, doc_b, sh_a, sh_b, inter) for every band-collision pair.
+    * FORMULA (Jaccard / containment) to the caller via [[verified]].
+    * Returns (doc_a, doc_b, n_a, n_b, inter) for every band-collision
+    * pair, doc_a < doc_b.
     */
   private def bandedScoredPairs(hr: DataFrame,
-      broadcastCandidates: Boolean,
       bands: Option[DataFrame] = None,
       sets: Option[DataFrame] = None,
       maxBandOccupancy: Int = 0): DataFrame =
-    scoredPairs(hr,
-      bandedCandidates(bands.getOrElse(minhashBands(hr)), maxBandOccupancy),
-      broadcastCandidates, sets)
+    bandPairs(bands.getOrElse(minhashBands(hr)).withColumn("f", lit(true)),
+      sets.getOrElse(shingleSets(hr)), maxBandOccupancy)(selfPair)
+
+  /** A field of one side of a candidate pair: `x("doc_id")`. The pair
+    * predicates below are written once over two sides and applied both
+    * to the bucket members of [[bucketPairs]] and to the aliased sides
+    * of the [[bandedCandidates]] self-join.
+    */
+  private[ext] type Side = String => Column
+
+  /** Self-pairs of one corpus, each unordered pair once. */
+  private[ext] val selfPair: (Side, Side) => Column =
+    (a, b) => a("doc_id") < b("doc_id")
+
+  /** Probe pairs: from a probe row (`f`) to any other document. */
+  private[ext] val probePair: (Side, Side) => Column =
+    (a, b) => a("f") && a("doc_id") =!= b("doc_id")
+
+  /** Incremental pairs: from a new document (`f`) to a stored one or to
+    * an earlier new one, so batch-internal pairs appear once. */
+  private[ext] val newPair: (Side, Side) => Column =
+    (a, b) => probePair(a, b) && (!b("f") || b("doc_id") < a("doc_id"))
+
+  /** Every band-collision pair meeting `pair`, scored: (doc_a, doc_b,
+    * n_a, n_b, inter), where doc_a is the pair's first side. `bands` is
+    * (doc_id, band_idx, band_val, f) — `f` marks the rows a pair may
+    * start from (the probe, the new batch; `true` for self-pairs) —
+    * and `sets` is (doc_id, sh). With an occupancy cap the pairs are
+    * verified inside their bucket ([[bucketPairs]]); without one the
+    * band self-join feeds [[scoredPairs]]. A pair that collides in
+    * several bands appears once per band on the bucket path, so the
+    * caller keeps rows through [[verified]], whose distinct makes them
+    * unique.
+    */
+  private def bandPairs(bands: DataFrame, sets: DataFrame, cap: Int)(
+      pair: (Side, Side) => Column): DataFrame =
+    if (cap > 0) bucketPairs(bands, sets, cap)(pair)
+    else scoredPairs(bandedCandidates(bands, 0, pair), sets)
+
+  /** Band-bucket verification under an occupancy cap (`cap` > 0): the
+    * LSH banding scheme of Leskovec, Rajaraman & Ullman (*Mining of
+    * Massive Datasets* ch. 3), run as text-dedup's Spark MinHash runs
+    * it — group each band bucket, emit and score the pairs inside it.
+    *
+    *  1. A window over (band_idx, band_val) counts each bucket's
+    *     occupancy; only live buckets stay — 2 ≤ occ ≤ cap, holding at
+    *     least one row with `f` set. A skipped bucket is exactly the one
+    *     [[bandedCandidates]]' hot-bucket census drops, or one that can
+    *     form no pair.
+    *  2. Sets join onto the live members only, so a document's set
+    *     moves at most [[BandCount]] times, and only if it is in a live
+    *     bucket.
+    *  3. One groupBy per bucket collects (doc_id, f, sh) of its members.
+    *  4. Two explodes enumerate the member pairs under `pair`, and
+    *     [[SortedIntersectSize]] scores them.
+    *
+    * One bucket holds at most `cap` sets, so the grouped row is bounded;
+    * that bound is why the plan needs the cap and why no pair frame,
+    * checkpoint or set-attach join exists on this path. A pair that
+    * collides in k live bands is emitted k times with the same score;
+    * callers collapse the copies with a distinct over the verified rows.
+    */
+  private[ext] def bucketPairs(bands: DataFrame, sets: DataFrame, cap: Int)(
+      pair: (Side, Side) => Column): DataFrame = {
+    require(cap > 0, s"bucket verification needs an occupancy cap, got $cap")
+    val bucket = Window.partitionBy("band_idx", "band_val")
+    val x: Side = c => col("x")(c)
+    val y: Side = c => col("y")(c)
+    bands
+      .withColumn("__occ", count(lit(1)).over(bucket))
+      .withColumn("__live", max(col("f")).over(bucket))
+      .where(col("__occ").between(2, cap) && col("__live"))
+      .join(sets.select("doc_id", "sh"), "doc_id")
+      .groupBy("band_idx", "band_val")
+      .agg(collect_list(struct("doc_id", "f", "sh")).as("m"))
+      .select(explode(col("m")).as("x"), col("m"))
+      .select(col("x"), explode(col("m")).as("y"))
+      .where(pair(x, y))
+      .select(x("doc_id").as("doc_a"), y("doc_id").as("doc_b"),
+        size(x("sh")).as("n_a"), size(y("sh")).as("n_b"),
+        SortedIntersectSize(x("sh"), y("sh")).as("inter"))
+  }
 
   /** The standard 2-row-band candidate channel: pairs sharing any packed
-    * band key (doc_a < doc_b). Takes the BAND TABLE (the signature
-    * store's at-rest half, [[minhashBands]]) directly, so a persisted
-    * store skips the 16-permutation min-aggregate entirely.
+    * band key that meet `pair` (default doc_a < doc_b). Takes the BAND
+    * TABLE (the signature store's at-rest half, [[minhashBands]])
+    * directly, so a persisted store skips the 16-permutation
+    * min-aggregate entirely.
     *
     * @param maxBandOccupancy opt-in hot-bucket bound (> 0 enables):
     *   band buckets holding more than this many documents are skipped —
@@ -483,9 +535,11 @@ object Dedup {
     *   enumeration. The census is one aggregate over the band store —
     *   at rest it is maintained with the store itself. Default 0 =
     *   unbounded (the API contract; callers opt in per corpus).
+    *   [[bucketPairs]] applies the same census to the verified pairs.
     */
   private[graft] def bandedCandidates(banded: DataFrame,
-      maxBandOccupancy: Int = 0): DataFrame = {
+      maxBandOccupancy: Int = 0,
+      pair: (Side, Side) => Column = selfPair): DataFrame = {
     val base =
       if (maxBandOccupancy <= 0) banded
       else {
@@ -501,75 +555,79 @@ object Dedup {
       .join(base.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") < col("b.doc_id"))
+          pair(c => col(s"a.$c"), c => col(s"b.$c")))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
   }
 
-  /** Exact verification of an arbitrary candidate channel: distinct +
-    * checkpoint the pair list, build shingle sets for candidate docs
-    * only, intersect. Candidate generation is pluggable
-    * ([[bandedCandidates]], the stratified union in
-    * [[containmentNearDupStratified]]); verification is shared.
+  /** Exact verification of a candidate PAIR channel: (doc_a, doc_b) →
+    * (doc_a, doc_b, n_a, n_b, inter). It serves what is not a capped
+    * band bucket — the stratified skew channel of
+    * [[containmentNearDupStratified]], and every cap = 0 caller (the
+    * streaming [[nearDupIncremental]], the API defaults). Capped band
+    * channels never come here: [[bucketPairs]] verifies them inside the
+    * bucket, with no pair frame.
+    *
+    * The plan distincts and checkpoints the pair list, restricts `sets`
+    * to candidate ids, and attaches a set to each side of every pair.
     */
-  private def scoredPairs(hr: DataFrame, cand0: DataFrame,
-      broadcastCandidates: Boolean,
-      setsStore: Option[DataFrame] = None): DataFrame = {
+  private[ext] def scoredPairs(cand0: DataFrame, sets0: DataFrame): DataFrame = {
     // localCheckpoint: cand is collision pairs — small — and it is
     // consumed three times below (id filter twice, pair join once);
     // materializing it keeps the candidate-generation subtree from
     // re-executing per consumer.
     val cand = Ckpt.ser(cand0.distinct())
-    // Candidate-id filter, shared by both set sources below: the
-    // verification inner joins only ever consume candidate docs' sets,
-    // so restricting the set frame to candidate ids first is exact.
+    // Candidate-id semi-filter: the verification inner joins only ever
+    // consume candidate docs' sets, so restricting the set frame first
+    // is exact. With a persisted set store it makes the attach joins
+    // point reads in every store medium (ADVICE r17 #1) — without it
+    // both joins shuffle the FULL set table even when candidate pairs
+    // are few. candIds is band collisions, so AQE broadcasts the semi
+    // side when it measures small; on a duplicate-saturated corpus it
+    // IS the corpus, so no join here assumes a broadcast. Materialized
+    // because both attach joins consume it: without the checkpoint the
+    // store scan + semi-join subtree would re-execute per consumer.
     val candIds = cand.select(col("doc_a").as("doc_id"))
       .union(cand.select(col("doc_b").as("doc_id"))).distinct()
-    // Verification sets: with a persisted SHINGLE-SET store (the other
-    // at-rest half of the signature store — `(doc_id, sh)` written at
-    // ingest beside the band table, see [[nearDupIncremental]]), the
-    // verification joins are point reads against the stored sets by
-    // candidate id. The candidate-id SEMI-JOIN here is what makes them
-    // point reads in every store medium (ADVICE r17 #1): without it,
-    // both verification joins shuffle the FULL corpus set table even
-    // when candidate pairs are few — at rest that is a pruned read, but
-    // the in-session localCheckpoint medium has no pruning, so every
-    // probe paid a corpus-sized exchange twice. candIds is band
-    // collisions — usually tiny — so AQE broadcasts the semi side and
-    // the store is read once with a hash filter, never shuffled.
-    // Without a store, sets build from hr for docs that appear in some
-    // candidate pair: the same id semi-filter drops non-candidates
-    // BEFORE the collect_set, so the heavy aggregate shuffles candidate
-    // shingles instead of the whole corpus's (at 100 TB the full-corpus
-    // set aggregate IS the job; candidates are band collisions, usually
-    // orders of magnitude fewer — but see the broadcastCandidates
-    // contract above: on a duplicate-saturated corpus candIds IS the
-    // corpus, so none of these joins may assume a broadcast; AQE
-    // re-instates it when warranted). One filtered pass, materialized
-    // (both source shapes) because both verification joins consume it:
-    // without the checkpoint the store scan + semi-join subtree would
-    // re-execute per consumer — two full store reads instead of one.
-    val sets = Ckpt.ser(setsStore.map(st =>
-        st.join(maybeBroadcast(candIds, broadcastCandidates),
-          Seq("doc_id"), "left_semi"))
-      .getOrElse(shingleSets(
-        hr.join(maybeBroadcast(candIds, broadcastCandidates), "doc_id"))))
+    val sets = Ckpt.ser(sets0.select("doc_id", "sh")
+      .join(candIds, Seq("doc_id"), "left_semi"))
     // Join strategy (guide §3.1): the attached-sets frame below grows to
-    // |pairs| × |avg set| — tens of GB at sf100 — and a sort-merge join
-    // would EXTERNAL-SORT it for the second attach (the r18 stage-3
-    // campaign run died on exactly that spill). The sets side is
-    // candidate-bounded by the semi-join above, so it is the hash BUILD
-    // side: shuffled-hash keeps the wide pair frame streaming, never
-    // sorted. When `broadcastCandidates` adds a broadcast hint on the
-    // other side, that higher-priority hint wins and this one is
-    // ignored — the probe-scale plans are unchanged.
+    // |pairs| × |avg set| — tens of GB at sf100 uncapped — and a
+    // sort-merge join would EXTERNAL-SORT it for the second attach (the
+    // r18 stage-3 campaign run died on exactly that spill). The sets
+    // side is candidate-bounded by the semi-join above, so it is the
+    // hash BUILD side: shuffled-hash keeps the wide pair frame
+    // streaming, never sorted.
     val withA = sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
       .hint("shuffle_hash")
-      .join(maybeBroadcast(cand, broadcastCandidates), "doc_a")
+      .join(cand, "doc_a")
     sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
       .hint("shuffle_hash")
-      .join(maybeBroadcast(withA, broadcastCandidates), "doc_b")
-      .withColumn("inter", SortedIntersectSize(col("sh_a"), col("sh_b")))
+      .join(withA, "doc_b")
+      .select(col("doc_a"), col("doc_b"),
+        size(col("sh_a")).as("n_a"), size(col("sh_b")).as("n_b"),
+        SortedIntersectSize(col("sh_a"), col("sh_b")).as("inter"))
   }
+
+  /** Exact Jaccard of a scored pair, truncated to 6dp:
+    * |A ∩ B| / (|A| + |B| − |A ∩ B|) over distinct sets. */
+  private[ext] def jaccard: Column = TextOps.trunc6(col("inter") /
+    (col("n_a") + col("n_b") - col("inter")).cast("double"))
+
+  /** Exact containment of a scored pair, truncated to 6dp:
+    * |A ∩ B| / min(|A|, |B|). */
+  private def containment: Column = TextOps.trunc6(col("inter") /
+    least(col("n_a"), col("n_b")).cast("double"))
+
+  /** (doc_a, doc_b, `name`) for the scored pairs whose `score` clears
+    * `threshold`. The distinct is exact — a pair's score is a function
+    * of its two sets — and it collapses the per-band copies
+    * [[bucketPairs]] emits, over verified rows only.
+    */
+  private[ext] def verified(scored: DataFrame, name: String, score: Column,
+      threshold: Double): DataFrame =
+    scored.select(col("doc_a"), col("doc_b"), score.as(name))
+      .where(col(name) >= threshold)
+      .distinct()
 
   /** X4 — INCREMENTAL near-dup: dedupe a newly-arrived batch against an
     * existing corpus (and within itself) without ever re-pairing the
@@ -591,14 +649,13 @@ object Dedup {
     * stream of documents is cut into batches.
     */
   def nearDupIncremental(existing: DataFrame, incoming: DataFrame,
-      threshold: Double = 0.5, broadcastCandidates: Boolean = false): DataFrame = {
+      threshold: Double = 0.5): DataFrame = {
     val hrE = hashedShingleRows(existing)
     // Recompute the existing side's signature tables in-query; the store
     // form ([[nearDupAgainstStore]]) takes them pre-persisted instead and
     // nothing downstream changes (CorpusPrepSpec asserts the parquet
     // round trip is exact).
-    nearDupAgainstStore(minhashBands(hrE), shingleSets(hrE), incoming, threshold,
-      broadcastCandidates)
+    nearDupAgainstStore(minhashBands(hrE), shingleSets(hrE), incoming, threshold)
   }
 
   /** [[nearDupIncremental]] against a PERSISTED signature store: the
@@ -609,97 +666,46 @@ object Dedup {
     * This is the form a 100 TB pipeline actually runs: per batch it reads
     * the store, never re-tokenizes the corpus.
     *
-    * The batch side is bounded by contract, but its CANDIDATE pairs are
-    * not — a batch of popular boilerplate can collide with a large slice
-    * of the store — so the verification joins default to shuffle joins
-    * (AQE broadcasts at runtime when actually small);
-    * `broadcastCandidates` pins the hint, same contract as
-    * [[nearDupMinhash]].
+    * Store and batch band rows are unioned with `f` = is-new, and a pair
+    * starts at a new doc: it matches a stored doc, or an earlier new one.
+    * With `maxBandOccupancy` > 0 (the declared query passes 64) the
+    * pairs are verified inside their band bucket ([[bucketPairs]]):
+    * buckets above the cap — counted over store + batch — are skipped,
+    * as are buckets without a new doc, and only live members' sets
+    * move. With 0 (the streaming caller) the band self-join feeds
+    * [[scoredPairs]].
     */
   def nearDupAgainstStore(existingBands: DataFrame, existingSets: DataFrame,
       incoming: DataFrame, threshold: Double = 0.5,
-      broadcastCandidates: Boolean = false,
       maxBandOccupancy: Int = 0): DataFrame = {
     // The batch's hashed-shingle scan feeds its band table AND its set
-    // table (which is itself consumed twice below): checkpoint so the
-    // batch tokenize+shingle+md5 pass runs once, not three times — the
-    // corpusManifest shared-scan precedent, batch-sized state only.
+    // table: checkpoint so the batch tokenize+shingle+md5 pass runs
+    // once — the corpusManifest shared-scan precedent, batch-sized
+    // state only.
     val hrI = Ckpt.ser(hashedShingleRows(incoming))
-    val bands0 = existingBands
+    val bands = existingBands
       .select(col("doc_id"), col("band_idx"), col("band_val")) // store col order free
-      .withColumn("is_new", lit(false))
-      .unionByName(minhashBands(hrI).withColumn("is_new", lit(true)))
-    // Opt-in hot-band cap over the UNIONED band table (store + batch) —
-    // the [[bandedCandidates]] occupancy census applied to the
-    // incremental channel; default 0 = unbounded.
-    val bands =
-      if (maxBandOccupancy <= 0) bands0
-      else {
-        val hot = bands0.groupBy("band_idx", "band_val")
-          .agg(count(lit(1)).as("__occ"))
-          .where(col("__occ") > maxBandOccupancy)
-          .select("band_idx", "band_val")
-        bands0.join(hot, Seq("band_idx", "band_val"), "left_anti")
-      }
-    val probe = bands.where(col("is_new"))
-    // Materialized once (r18): the probe-side verification join AND the
-    // match-id semi-filter below both consume it.
-    val cand = Ckpt.ser(probe.as("a")
-      .join(bands.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") =!= col("b.doc_id") &&
-          (!col("b.is_new") || col("b.doc_id") < col("a.doc_id")))
-      .select(col("a.doc_id").as("doc_new"), col("b.doc_id").as("doc_match"))
-      .distinct())
-    // Verification streams the batch's sets against the candidate list;
-    // the match side unions the stored sets in (at rest that read is a
-    // pruned lookup by candidate doc_id, not a scan).
-    // Consumed twice (the probe-side join and the match-side union):
-    // materialize the batch-sized aggregate once.
-    val batchSets = Ckpt.ser(shingleSets(hrI))
-    // Candidate-id semi-filter on the match side BEFORE the union with
-    // the batch sets (the [[scoredPairs]] ADVICE-r17-#1 discipline):
-    // the verification inner join only consumes candidate match docs'
-    // sets, and without the filter the corpus-scale store would flow
-    // into the join whole — and could not be the shuffled-hash build
-    // side below.
-    val matchIds = cand.select(col("doc_match").as("doc_id")).distinct()
+      .withColumn("f", lit(false))
+      .unionByName(minhashBands(hrI).withColumn("f", lit(true)))
     val sets = existingSets.select(col("doc_id"), col("sh"))
-      .join(maybeBroadcast(matchIds, broadcastCandidates), Seq("doc_id"), "left_semi")
-      .unionByName(batchSets)
-    // Same shuffled-hash discipline as [[scoredPairs]]: build the
-    // bounded sets side, stream the widening pair frame (never sort it).
-    val withA = batchSets.select(col("doc_id").as("doc_new"), col("sh").as("sh_a"))
-      .hint("shuffle_hash")
-      .join(maybeBroadcast(cand, broadcastCandidates), "doc_new")
-    val full = sets.select(col("doc_id").as("doc_match"), col("sh").as("sh_b"))
-      .hint("shuffle_hash")
-      .join(maybeBroadcast(withA, broadcastCandidates), "doc_match")
-    full
-      .withColumn("inter", SortedIntersectSize(col("sh_a"), col("sh_b")))
-      .withColumn("jaccard", TextOps.trunc6(col("inter") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double")))
-      .where(col("jaccard") >= threshold)
-      .select("doc_new", "doc_match", "jaccard")
+      .unionByName(shingleSets(hrI))
+    verified(bandPairs(bands, sets, maxBandOccupancy)(newPair),
+      "jaccard", jaccard, threshold)
+      .select(col("doc_a").as("doc_new"), col("doc_b").as("doc_match"), col("jaccard"))
   }
 
   /** Point-lookup near-dup SEARCH against the signature store: for
     * every document matching the `probe` predicate, all of its corpus
     * near-dups at `threshold` — the interactive face of the dedup
     * family ("what does this doc duplicate?") and the read path of an
-    * entity-resolution service. Candidates come from band-bucket
-    * equality between the probe rows and the full band table; only
-    * candidate documents' shingle sets are fetched for verification.
-    * Output both directions: (probe_id, match_id, jaccard) — two probes
-    * that match each other each get a row.
+    * entity-resolution service. Candidates share a band bucket with a
+    * probe row; only candidate documents' shingle sets are read for
+    * verification. Output both directions: (probe_id, match_id,
+    * jaccard) — two probes that match each other each get a row.
     *
-    * Scale: the probe band rows are batch-bounded (≪ store) and the
-    * candidate join is an equi-join on (band_idx, band_val) — at rest
-    * band_val is the store's bucket key, so the lookup is a pruned
-    * index read, not a table scan; the set fetch is a semi-join by
-    * candidate doc_id (point reads against the at-rest sets table).
-    * Nothing in the plan scans the corpus text.
+    * Scale: the probe is a predicate over the band rows (`f`), and at
+    * rest band_val is the store's bucket key. Nothing in the plan scans
+    * the corpus text.
     *
     * HOT-BAND BOUND (`maxBandOccupancy`): band buckets holding more
     * than `maxBandOccupancy` documents are SKIPPED entirely — without
@@ -710,65 +716,29 @@ object Dedup {
     * sf10 run measured per-probe cost ×2.8 per corpus decade from
     * exactly this). With the cap, a probe verifies ≤ [[BandCount]] ×
     * maxBandOccupancy candidates — FLAT per-probe cost at any corpus
-    * size. The recall trade, documented: a pair is lost only if EVERY
-    * band it collides in is saturated — for true near-dups below
-    * cluster size `maxBandOccupancy` at least one rare band survives
-    * in expectation, and a probe INSIDE a >cap identical cluster is
-    * exactly the case exact dedup ([[exact]]) already answers without
-    * pair enumeration (the LSH-Ensemble `minSigMatches` class of
-    * trade; WarehouseOpsSpec pins both sides). The occupancy census is
-    * one aggregate over the band store — at rest it is maintained with
-    * the store itself and the skip is a partition-pruned read.
+    * size — and the verification runs inside the bucket
+    * ([[bucketPairs]]): only buckets holding a probe row are grouped,
+    * and a set moves at most once per live band. The recall trade,
+    * documented: a pair is lost only if EVERY band it collides in is
+    * saturated — for true near-dups below cluster size
+    * `maxBandOccupancy` at least one rare band survives in expectation,
+    * and a probe INSIDE a >cap identical cluster is exactly the case
+    * exact dedup ([[exact]]) already answers without pair enumeration
+    * (the LSH-Ensemble `minSigMatches` class of trade; WarehouseOpsSpec
+    * pins both sides). Default 0 = unbounded, matching every other
+    * occupancy knob in the family: the band self-join feeds
+    * [[scoredPairs]], whose candidate-id semi-join keeps the set reads
+    * to candidates.
     */
   def nearDupLookup(storeBands: DataFrame, hr: DataFrame, probe: Column,
       threshold: Double = 0.5, maxBandOccupancy: Int = 0,
       storeSets: Option[DataFrame] = None): DataFrame = {
-    // Saturated-bucket list: tiny (only buckets above the cap), so the
-    // anti joins below broadcast it; the aggregate is one scan of the
-    // band store (at rest: the store's maintained occupancy census).
-    // Default 0 = unbounded, matching every other occupancy knob in the
-    // family — the recall trade is opt-in at call sites (the declared
-    // probe_near_dups query passes 64).
-    val bands =
-      if (maxBandOccupancy <= 0) storeBands
-      else {
-        val hot = storeBands.groupBy("band_idx", "band_val")
-          .agg(count(lit(1)).as("__occ"))
-          .where(col("__occ") > maxBandOccupancy)
-          .select("band_idx", "band_val")
-        storeBands.join(hot, Seq("band_idx", "band_val"), "left_anti")
-      }
-    val probeBands = bands.where(probe)
-    val cand = probeBands.as("a")
-      .join(bands.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.doc_id").as("probe_id"), col("b.doc_id").as("match_id"))
-      .distinct()
-      .localCheckpoint() // three consumers: two set joins + the id filter
-    // With the persisted shingle-set store the verification joins are
-    // point reads by candidate id (the at-rest read path the scaladoc
-    // describes) — the candidate-id semi-join below is what makes them
-    // point reads in every store medium (ADVICE r17 #1: without it both
-    // verification joins shuffled the FULL store even for a tiny probe);
-    // otherwise build sets from hr for candidate ids only.
-    val ids = cand.select(col("probe_id").as("doc_id"))
-      .unionByName(cand.select(col("match_id").as("doc_id"))).distinct()
-    // Materialized: both verification joins below consume `sets`, and
-    // without the checkpoint the store scan + semi-join subtree would
-    // re-execute per consumer (two full store reads for one probe).
-    val sets = Ckpt.ser(storeSets
-      .map(_.join(ids, Seq("doc_id"), "left_semi"))
-      .getOrElse(shingleSets(hr.join(ids, Seq("doc_id"), "left_semi"))))
-    cand
-      .join(sets.select(col("doc_id").as("probe_id"), col("sh").as("sh_a")), "probe_id")
-      .join(sets.select(col("doc_id").as("match_id"), col("sh").as("sh_b")), "match_id")
-      .withColumn("inter", SortedIntersectSize(col("sh_a"), col("sh_b")))
-      .withColumn("jaccard", TextOps.trunc6(col("inter") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double")))
-      .where(col("jaccard") >= threshold)
-      .select("probe_id", "match_id", "jaccard")
+    val bands = storeBands.select(col("doc_id"), col("band_idx"),
+      col("band_val"), probe.as("f"))
+    verified(bandPairs(bands, storeSets.getOrElse(shingleSets(hr)),
+        maxBandOccupancy)(probePair),
+      "jaccard", jaccard, threshold)
+      .select(col("doc_a").as("probe_id"), col("doc_b").as("match_id"), col("jaccard"))
   }
 
   /** X1/X4 composition — duplicate GROUPS: connected components of the
@@ -1171,9 +1141,8 @@ object Dedup {
     *   healthy corpora where prefix collisions ≪ corpus. Default false:
     *   the shuffle join-back on doc_id has the same output and never
     *   OOMs an executor when a duplicate-saturated crawl makes
-    *   candidates corpus-scale — the scoredPairs broadcastCandidates
-    *   precedent. Opt-in like Reconcile.broadcastDim, never
-    *   unconditional.
+    *   candidates corpus-scale. Opt-in like Reconcile.broadcastDim,
+    *   never unconditional.
     */
   def ngramJaccardBlocked(docs: DataFrame, threshold: Double = 0.8,
       broadcastBlocked: Boolean = false, gramLen: Int = GramLen): DataFrame =

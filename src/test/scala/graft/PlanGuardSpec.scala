@@ -7,7 +7,9 @@ package graft
   * nested-loop range join, or an extra exchange fails a unit test
   * instead of degrading a bench. Inputs are the sf0.001 parquet tables;
   * plan SHAPE at this size matches the audited sf0.1 shapes for
-  * everything asserted here (no AQE decisions are asserted).
+  * everything asserted here (no AQE decisions are asserted). One case
+  * instead counts the Spark jobs a declaration starts once its stores
+  * are warm, which catches an eager checkpoint put back into a plan.
   */
 class PlanGuardSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
@@ -245,5 +247,51 @@ class PlanGuardSpec extends SparkSpec {
     assert(p.contains("l_shipdate"), "ship-window bounds not pushed to scan")
     val joins = "SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin".r.findAllIn(p).size
     assert(joins === 1, s"expected exactly 1 lineitem⋈orders join, got $joins")
+  }
+
+  test("warm-store MinHash declarations start no Spark job (no eager checkpoint)") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val queries = Seq("near_dup_minhash", "containment_near_dup",
+      "source_overlap", "probe_near_dups")
+    queries.foreach(q => SparkEntry.queries(q)(spark, dir)) // warms the stores
+    // Opening a parquet table reads its footers in a job of its own;
+    // source_overlap opens `documents` once, so it may start exactly the
+    // jobs a bare open starts, and nothing more.
+    val opens = Map("source_overlap" -> 1)
+    // Jobs are attributed by job group, so work from any other thread is
+    // not counted; the sentinel job's start is posted after every job the
+    // declarations started, so seeing it means the count is complete.
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach { g =>
+            if (g == "plan-guard-sentinel") flushed.countDown()
+            else if (g.startsWith("plan-guard:")) jobs.add(g)
+          }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("plan-guard:open", "declare")
+      Tables.documents(spark, dir)
+      queries.foreach { q =>
+        sc.setJobGroup(s"plan-guard:$q", "declare")
+        SparkEntry.queries(q)(spark, dir)
+      }
+      sc.setJobGroup("plan-guard-sentinel", "flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val started = jobs.toArray.toSeq.groupBy(identity).map { case (g, js) => g -> js.size }
+    val perOpen = started.getOrElse("plan-guard:open", 0)
+    queries.foreach { q =>
+      assert(started.getOrElse(s"plan-guard:$q", 0) === opens.getOrElse(q, 0) * perOpen,
+        s"declaring $q with warm stores started jobs: $started")
+    }
   }
 }

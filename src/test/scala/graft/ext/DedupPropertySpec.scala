@@ -483,9 +483,64 @@ class DedupPropertySpec extends AnyFunSuite {
     val expJ = math.floor(11.0 / 13.0 * 1e6) / 1e6
     assert(out.forall { case (a, b, j) => a < b && math.abs(j - expJ) < 1e-9 })
     assert(out.length >= 185, s"expected ~190 saturated pairs, got ${out.length}")
-    // And the opt-in pinned-broadcast path agrees exactly.
-    val pinned = Dedup.nearDupMinhash(docs, broadcastCandidates = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(out.toSet == pinned.toSet)
+  }
+
+  test("bucket verifier ≡ scoredPairs(bandedCandidates) on pairs, probe and incremental shapes") {
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    val cap = 5
+    val rnd = new scala.util.Random(11)
+    // Random corpus: 8 bands per doc over a small per-band value domain,
+    // so buckets fall on both sides of the cap and random pairs collide
+    // in several bands.
+    val random = for (d <- 0L until 40L; j <- 0 until 8) yield (d, j, rnd.nextInt(12).toLong)
+    // A planted cluster of 8 > cap docs sharing every band: hot only.
+    val cluster = for (d <- 100L until 108L; j <- 0 until 8) yield (d, j, 999L)
+    // 200/201 share the hot band-0 bucket with the cluster AND a live
+    // band-1 bucket of their own; their other bands are unique.
+    val planted = for (d <- Seq(200L, 201L); j <- 0 until 8) yield
+      (d, j, if (j == 0) 999L else if (j == 1) 5000L else 10000L + 8 * d + j)
+    val rows = random ++ cluster ++ planted
+    val bands = rows.toDF("doc_id", "band_idx", "band_val")
+    val sets = rows.map(_._1).distinct.map { d =>
+      (d, Seq.fill(10)(rnd.nextInt(16).toLong).distinct.sorted.toArray)
+    }.toDF("doc_id", "sh")
+    val noHr = spark.emptyDataFrame
+    def sorted(df: DataFrame): Seq[(Long, Long, Double)] =
+      df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
+    // Threshold 0 keeps every verified candidate, so the comparison
+    // covers the whole candidate channel, not only the near-dups.
+    def shape(f: Column, pair: (Dedup.Side, Dedup.Side) => Column): Seq[(Long, Long, Double)] = {
+      val bf = bands.withColumn("f", f)
+      val got = sorted(Dedup.verified(Dedup.bucketPairs(bf, sets, cap)(pair),
+        "jaccard", Dedup.jaccard, 0.0))
+      val ref = sorted(Dedup.verified(
+        Dedup.scoredPairs(Dedup.bandedCandidates(bf, cap, pair), sets),
+        "jaccard", Dedup.jaccard, 0.0))
+      assert(got.nonEmpty)
+      assert(got === ref)
+      assert(got.distinct === got, "a verified pair appears twice")
+      got
+    }
+
+    val pairs = shape(lit(true), Dedup.selfPair)
+    assert(pairs.exists(p => p._1 == 200L && p._2 == 201L),
+      "a pair colliding in a hot and a live band must be kept")
+    val hot = (100L until 108L).toSet + 200L + 201L
+    assert(!pairs.exists(p => hot(p._1) && hot(p._2) && !(p._1 == 200L && p._2 == 201L)),
+      "a pair colliding only in hot bands must be dropped")
+    // Pairs colliding in several live bands are emitted once per band;
+    // the verified distinct is what makes them unique.
+    assert(Dedup.bucketPairs(bands.withColumn("f", lit(true)), sets, cap)(
+      Dedup.selfPair).count() > pairs.size)
+    assert(sorted(Dedup.nearDupMinhashFromHashes(noHr, threshold = 0.0,
+      bands = Some(bands), sets = Some(sets), maxBandOccupancy = cap)) === pairs)
+
+    val probe = pmod(col("doc_id"), lit(2)) === 0
+    assert(sorted(Dedup.nearDupLookup(bands, noHr, probe, threshold = 0.0,
+      maxBandOccupancy = cap, storeSets = Some(sets))) === shape(probe, Dedup.probePair))
+
+    val incremental = shape(pmod(col("doc_id"), lit(3)) === 0, Dedup.newPair)
+    assert(incremental.forall { case (a, b, _) => a % 3 == 0 && (b % 3 != 0 || b < a) })
   }
 }

@@ -141,24 +141,6 @@ class SignatureStoreSpec extends SparkSpec {
       === Dedup.nearDupSimhashFromChunks(ch).collect().toSeq.map(_.toString).sorted)
   }
 
-  test("k-shingle store: batch slice span counts ≡ tokenizing the batch") {
-    import org.apache.spark.sql.functions.{col, pmod, lit}
-    // r17: span_ingest_replay derives each batch's span summary from a
-    // doc-residue SLICE of the k-shingle store; per-doc purity makes the
-    // slice ≡ shingleHashes(batch).distinct(), so the folded store must
-    // be bit-identical to per-batch tokenization.
-    val sh = roundTrip(
-      Corpus.shingleHashes(docs, Corpus.DecontamShingle).distinct(), "k8slice")
-    val viaStore = (0 until 3)
-      .map(i => Corpus.spanCountsFromHashes(
-        sh.where(pmod(col("doc_id"), lit(3)) === i)))
-      .reduce(Corpus.spanStoreMerge).collect().toSeq.map(_.toString).sorted
-    val viaDocs = (0 until 3)
-      .map(i => Corpus.spanCounts(docs.where(pmod(col("doc_id"), lit(3)) === i)))
-      .reduce(Corpus.spanStoreMerge).collect().toSeq.map(_.toString).sorted
-    assert(viaStore === viaDocs)
-  }
-
   test("manifest keeper-label store: probing labels equals recomputing") {
     import org.apache.spark.sql.functions.{col, pmod, lit}
     val corpus = docs.where(pmod(col("doc_id"), lit(20)) =!= 0)

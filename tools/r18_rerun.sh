@@ -46,11 +46,6 @@ SPARK_GRAFT_BENCH_FULL=/root/repo/tools/r18_runs/sf100_dedup_cold2.json \
   | tee >(grep "bench pass" > /root/repo/tools/r18_runs/sf100_dedup_cold2_passes.txt) \
   | tail -2
 
-echo "== stage 4 rerun: near_dup_minhash decomposition at sf100 =="
-SPARK_GRAFT_STORE_DIR=/root/repo/scale-data/stores_sf100_dedup \
-  sbt -batch "runMain graft.MinhashProfile /root/repo/scale-data/sf100" 2>&1 \
-  | grep MHPROF | tee /root/repo/tools/r18_runs/mhprof_sf100_2.txt
-
 echo "== stage 1b: sf1 scaling knee, c2/c8/c32 =="
 bash tools/r18_scale2.sh
 

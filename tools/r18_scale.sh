@@ -17,9 +17,6 @@
 #          store halves, one build+probe pass (near_dup_minhash builds
 #          hr+bands+sets; then one probe pass re-times the steady read)
 #          — the ingest price the steady-state probe numbers travel with.
-# Stage 4  near_dup_minhash decomposition at sf100 (ask #4): MinhashProfile
-#          over the warm stores — banded-candidate volume vs verification
-#          mass, band-occupancy census.
 set -e
 set -o pipefail
 cd /root/repo
@@ -84,10 +81,5 @@ SPARK_GRAFT_BENCH_FULL=/root/repo/tools/r18_runs/sf100_dedup_cold.json \
   sbt -batch "runMain graft.Bench" 2>&1 \
   | tee >(grep "bench pass" > /root/repo/tools/r18_runs/sf100_dedup_cold_passes.txt) \
   | tail -2
-
-echo "== stage 4: near_dup_minhash decomposition at sf100 =="
-SPARK_GRAFT_STORE_DIR=/root/repo/scale-data/stores_sf100_dedup \
-  sbt -batch "runMain graft.MinhashProfile /root/repo/scale-data/sf100" 2>&1 \
-  | grep MHPROF | tee /root/repo/tools/r18_runs/mhprof_sf100.txt
 
 echo "done"
