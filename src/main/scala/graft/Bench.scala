@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — times every declared query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A query that throws is recorded with its timing
   * AND an "errors" entry (a crashing query must be distinguishable from a
@@ -27,15 +25,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "4").toInt
-    val spark = Tables.sessionDefaults.foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false"))((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     def q(s: String): String =
       "\"" + s.flatMap {
         case '"'  => "\\\""

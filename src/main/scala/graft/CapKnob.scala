@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.ext.Dedup
 
 /** Measures the banded channel's occupancy caps (CellKnob pattern),
@@ -17,14 +15,7 @@ import graft.ext.Dedup
 object CapKnob {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq else Seq("/root/repo/scale-data/sf10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.sessionDefaults.foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false"))((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     for (dir <- dirs) {
       val hr = graft.ext.Ckpt.ser(Dedup.hashedShingleRows(Tables.documents(spark, dir)))
       val bands = graft.ext.Ckpt.ser(Dedup.minhashBands(hr))

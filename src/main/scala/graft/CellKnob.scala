@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.ext.Similarity
 
 /** Measures the ANN cell-count knob (VERDICT r11 ask #3): the declared
@@ -31,14 +29,7 @@ object CellKnob {
         "/root/repo/scale-data/sf10")
     val occupancy = sys.env.getOrElse("SPARK_GRAFT_CELL_OCCUPANCY", "200").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_CELL_REPS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.sessionDefaults.foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false"))((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     for (dir <- dirs) {
       val emb = Tables.embeddings(spark, dir)
       val n = emb.count()

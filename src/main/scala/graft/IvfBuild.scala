@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc IVF store-BUILD timing probe (not part of the driver
@@ -20,14 +19,7 @@ object IvfBuild {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val variant = sys.env.getOrElse("SPARK_GRAFT_IVF_VARIANT", "both")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.sessionDefaults.foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false"))((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val emb = Tables.embeddings(spark, dir)
 
     def time(name: String)(f: => org.apache.spark.sql.DataFrame): Unit = {

@@ -2,8 +2,6 @@ package graft
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.SparkSession
-
 import graft.etl.{Pipeline, ParquetWarehouseSink, RetailMapping}
 
 /** Scale exercise of the ETL pipeline itself (VERDICT r12 ask #6): the
@@ -40,14 +38,7 @@ object PipelineScale {
       else Seq("/root/testdata/sf0.1", "/root/repo/scale-data/sf1",
         "/root/repo/scale-data/sf10")
     val nDays = sys.env.getOrElse("SPARK_GRAFT_PIPE_DAYS", "5").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.sessionDefaults.foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false"))((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // Calendar around the flagship date — present at every sf (ScaleUp
     // replicates the seed's shipdate calendar verbatim).
     val dates = (0 until nDays).map(i => RetailMapping.Day.plusDays(i - nDays / 2))

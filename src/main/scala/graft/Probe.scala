@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc plan/timing probe (not part of the driver contract).
   *
   * DEV-ONLY entry point: never invoked by Verify/Bench or any query
@@ -12,13 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = Tables.sessionDefaults.foldLeft(SparkSession.builder()
-        .master("local[32]")
-        .config("spark.sql.shuffle.partitions", 32)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false"))((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(32)
     val dir = "/root/testdata/sf0.1"
 
     def dump(name: String)(df: org.apache.spark.sql.DataFrame): Unit = {

@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc formatted-plan dump for one declared query (driver-only, no
   * job execution): `runMain graft.QExplain <query>`.
   */
 object QExplain {
   def main(args: Array[String]): Unit = {
-    val spark = Tables.sessionDefaults.foldLeft(SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", 32)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false"))((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(2)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     args.foreach { name =>
       println(s"==== PLAN $name ====")

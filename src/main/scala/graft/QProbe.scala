@@ -13,18 +13,9 @@ object QProbe {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Tables.sessionDefaults.foldLeft(SparkSession.builder()
-        .master("local[32]")
-        .config("spark.sql.shuffle.partitions", 32)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false"))((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(32)
     // Experiment aliases beyond the declared map (plan-variant probes).
     val fn: (SparkSession, String) => org.apache.spark.sql.DataFrame = name match {
-      case "ngram_shuffle" => (s, dir) =>
-        graft.ext.Dedup.ngramJaccardBlocked(Tables.documents(s, dir),
-          broadcastBlocked = false).orderBy("doc_a", "doc_b")
       case "bloom_plain" => (s, dir) => {
         import org.apache.spark.sql.functions._
         val li = Tables.lineitem(s, dir).select(col("l_partkey"), col("l_quantity"))

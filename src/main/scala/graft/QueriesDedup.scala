@@ -65,10 +65,9 @@ private[graft] object QueriesDedup {
     // universe (≤ 37³) saturates past ~10⁵ docs (83×/decade at sf10,
     // r12) — see Dedup.GramLen. Candidates come from the 16×6 minhash
     // banding over the gram sets (Dedup.ngramJaccardBanded — the
-    // similarity-bounded scale path; ≈99.2% recall at the threshold,
+    // similarity-bounded plan; ≈99.2% recall at the threshold,
     // mirrored exactly by the oracle), verification stays the exact
-    // sorted-merge; the lossless AllPairs prefix plan remains the
-    // small-corpus API (ngramJaccardBlocked, property-tested).
+    // sorted-merge.
     "ngram_jaccard" -> ((s, dir) =>
       Dedup.ngramJaccardBanded(chargramSetsStore(s, dir),
         bands = Some(chargramBandsStore(s, dir)))

@@ -47,14 +47,7 @@ object ScaleUp {
     val src = sys.env.getOrElse("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
     val dst = sys.env.getOrElse("SPARK_GRAFT_SCALE_DST", "/root/repo/scale-data/sf1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.sessionDefaults.foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false"))((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     write(spark, src, dst, factor)
     spark.stop()
   }
@@ -132,8 +125,8 @@ object ScaleUp {
       //     every token) inflated INTRA-copy char-gram density — the
       //     fixed per-copy suffix makes ~40% of every token window a
       //     shared subsequence, measured as within-copy background
-      //     gram-J of 0.5–0.7 at sf1 vs the seed's 0.1–0.2 (GramDiag
-      //     pairJ histograms), again a regime no real 10× crawl has.
+      //     gram-J of 0.5–0.7 at sf1 vs the seed's 0.1–0.2 (pair-J
+      //     histograms), again a regime no real 10× crawl has.
       //     The suffix is GONE: the cipher already provides cross-copy
       //     token disjointness, and cipher-only copies replay the
       //     seed's intra-copy statistics at both levels exactly.

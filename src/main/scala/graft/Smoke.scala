@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Manual smoke: the flagship entry() on sf0.001, mirroring the driver's
   * t1 rows>0 check. `sbt "runMain graft.Smoke"`.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = Tables.sessionDefaults.foldLeft(SparkSession.builder()
-        .master("local[8]")
-        .config("spark.sql.shuffle.partitions", 8)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false"))((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(8)
     val df = SparkEntry.entry(spark)
     println("ENTRY ROWS=" + df.count())
     df.show(5, truncate = false)

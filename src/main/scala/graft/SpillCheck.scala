@@ -31,19 +31,6 @@ object SpillCheck {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    def session(spill: Boolean): SparkSession = {
-      val b = SparkSession.builder()
-        .master("local[8]")
-        .config("spark.sql.shuffle.partitions", if (spill) 4 else 8)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-      val withSpill = if (!spill) b else b
-        .config("spark.shuffle.spill.numElementsForceSpillThreshold", 2000)
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 2)
-        .config("spark.memory.fraction", 0.2)
-      Tables.sessionDefaults.foldLeft(withSpill)((x, kv) => x.config(kv._1, kv._2))
-        .getOrCreate()
-    }
     /** Order-insensitive exact fingerprint: md5 over the newline-joined
       * SORTED raw row strings (each row rendered column-sorted, null as
       * \\u0000, columns joined by \\u0001).
@@ -60,14 +47,19 @@ object SpillCheck {
         .map("%02x".format(_)).mkString
     }
 
-    val plain = session(spill = false)
-    plain.sparkContext.setLogLevel("WARN")
+    val plain = Session.local(8)
     val base = targets.map(n => n -> fingerprint(plain, n)).toMap
     plain.stop()
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
 
-    val spilly = session(spill = true)
-    spilly.sparkContext.setLogLevel("WARN")
+    // The forced-spill thresholds are core settings, read once when a
+    // context starts, so they go in as spark.* system properties, which
+    // the next context's SparkConf loads.
+    sys.props("spark.shuffle.spill.numElementsForceSpillThreshold") = "2000"
+    sys.props("spark.memory.fraction") = "0.2"
+    val spilly = Session.local(8)
+    spilly.conf.set("spark.sql.shuffle.partitions", 4)
+    spilly.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 2)
     @volatile var memSpilled = 0L
     @volatile var diskSpilled = 0L
     spilly.sparkContext.addSparkListener(new SparkListener {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.Window
 
 /** Ad-hoc global-window enumerator (VERDICT r17 ask #7 — list every
@@ -17,13 +16,7 @@ import org.apache.spark.sql.catalyst.plans.logical.Window
 object WindowAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = Tables.sessionDefaults.foldLeft(SparkSession.builder()
-        .master("local[8]")
-        .config("spark.sql.shuffle.partitions", 8)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false"))((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(8)
     var total = 0
     for ((name, q) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
       try {

@@ -562,8 +562,9 @@ object Dedup {
   /** Exact verification of a candidate PAIR channel: (doc_a, doc_b) →
     * (doc_a, doc_b, n_a, n_b, inter). It serves what is not a capped
     * band bucket — the stratified skew channel of
-    * [[containmentNearDupStratified]], and every cap = 0 caller (the
-    * streaming [[nearDupIncremental]], the API defaults). Capped band
+    * [[containmentNearDupStratified]], the uncapped gram bands of
+    * [[ngramJaccardBanded]], and every cap = 0 caller (the streaming
+    * [[nearDupIncremental]], the API defaults). Capped band
     * channels never come here: [[bucketPairs]] verifies them inside the
     * bucket, with no pair frame.
     *
@@ -1084,103 +1085,55 @@ object Dedup {
       .select("doc_a", "doc_b", "hamming")
   }
 
-  /** Character n-gram length of the prefix-filtered Jaccard family.
-    * FIVE, not three, and the choice is a scale wall, not taste: the
-    * normalized alphabet is [a-z0-9 ] (37 symbols), so the 3-gram
-    * universe is ≤ 37³ ≈ 5·10⁴ values — it CANNOT grow with the
-    * corpus, so past ~10⁵ documents every posting list (even the
-    * rare-prefix ones AllPairs leans on) grows ∝ n and prefix-candidate
-    * volume grows ~n²/universe: the r12 sf10 run measured 83×/decade
+  /** Character n-gram length of the char-gram Jaccard family
+    * ([[charGramSets]], [[ngramJaccardBanded]]). FIVE, not three, and the
+    * choice is a scale wall, not taste: the normalized alphabet is
+    * [a-z0-9 ] (37 symbols), so the 3-gram universe is ≤ 37³ ≈ 5·10⁴
+    * values — it CANNOT grow with the corpus, so past ~10⁵ documents
+    * every gram posting list grows ∝ n and gram-sharing candidate volume
+    * grows ~n²/universe: the r12 sf10 run measured 83×/decade
     * (14.7 s → 1224 s) on the 3-gram plan. The 5-gram universe is 37⁵ ≈
     * 6.9·10⁷ — 1,400× the headroom — and, more fundamentally, the
     * OCCUPIED gram set now grows with corpus content (new documents
-    * bring new 5-grams where every 3-gram is already taken), so rare
-    * prefix grams stay rare as the corpus grows and candidate volume
-    * tracks true near-dup density instead of corpus density. Grams pack
+    * bring new 5-grams where every 3-gram is already taken). Grams pack
     * into one BIGINT (ascii·256ᵏ positional code, max ≈ 5.3·10¹¹ ≪ 2⁶³
-    * — portable to any engine).
+    * — portable to any engine; a length above 7 would overflow it).
     *
     * A larger universe is necessary but NOT sufficient: a corpus whose
-    * token vocabulary is itself tiny occupies few grams at ANY n and
-    * prefix postings stay dense — the regime where the declared query
-    * routes candidates through [[ngramJaccardBanded]]'s similarity-
-    * bounded minhash banding instead (see its scaladoc for the
-    * measured comparison).
+    * token vocabulary is itself tiny occupies few grams at ANY n, so
+    * gram-sharing candidates stay dense — the regime where
+    * [[ngramJaccardBanded]] draws candidates from similarity-bounded
+    * minhash banding instead (see its scaladoc for the measured
+    * comparison).
     */
   val GramLen = 5
 
-  /** X4 — PREFIX-FILTERED character-n-gram Jaccard (AllPairs/PPJoin
-    * candidate generation — Bayardo et al. WWW'07, Xiao et al. WWW'08):
-    * candidates are pairs sharing at least one gram in their PREFIXES —
-    * each doc's first |g| − ⌈t·|g|⌉ + 1 grams under a global rarity
-    * order (ascending document frequency, derived at probe time over
-    * the probed corpus; see [[ngramJaccardFromGrams]]) — verified by
-    * exact char-[[GramLen]]-gram
-    * Jaccard ≥ `threshold`. Output: doc_a, doc_b, jaccard (truncated
-    * 6dp).
-    *
-    * Prefix filtering is LOSSLESS: J(A,B) ≥ t forces |A∩B| ≥
-    * ⌈t·max(|A|,|B|)⌉ ≥ ⌈t·|A|⌉, and the SSJoin prefix lemma gives
-    * prefix(A) ∩ prefix(B) ≠ ∅ for any shared total order (pinned
-    * empirically by DedupPropertySpec's ≡-naive-all-pairs test). Unlike
-    * the previous (lang, length-bucket) blocking — whose candidate
-    * volume is density-QUADRATIC, O(Σ block²), and measured 30× cost
-    * for 10× data at sf1 because every same-length same-lang pair
-    * collides regardless of content — prefix candidates require shared
-    * CONTENT, so disjoint-vocabulary corpus growth adds zero cross
-    * pairs and candidate volume tracks the true near-dup density. The
-    * size-ratio bound (|A| ≥ t·|B|, a Jaccard upper bound) rides the
-    * candidate join as a residual, and the ceil() is nudged down 1e-9
-    * before evaluation so a binary-FP product like 0.8·10 =
-    * 8.000000000000002 can never round the prefix SHORTER than the
-    * lossless length (longer is safe, shorter loses pairs).
+  /** Per-doc sorted BIGINT-encoded char-[[GramLen]]-gram sets (doc_id,
+    * lang, grams) — the char-gram half of the signature store, a PURE
+    * per-document function: each stored array element is the
+    * packed-ASCII gram code alone, sorted by VALUE, with no corpus-level
+    * statistic baked in. That purity is the store's incremental
+    * contract — `charGramSets(newDocs)` unioned onto a store persisted at
+    * any earlier time probes identically to a fresh one-shot build
+    * (pinned by SignatureStoreSpec's banded mixed-era case).
+    * Threshold-independent too: the threshold enters only the probe's
+    * pair residual, so ONE store serves probes at any threshold (the
+    * former length-bucket column baked `1/threshold` into the schema and
+    * tied the store to its build threshold).
     */
-  /** @param broadcastBlocked opt-in assertion that the PRE-verification
-    *   candidate-pair list (distinct prefix-gram collisions, before the
-    *   exact-Jaccard join-back) fits the broadcast budget — true on
-    *   healthy corpora where prefix collisions ≪ corpus. Default false:
-    *   the shuffle join-back on doc_id has the same output and never
-    *   OOMs an executor when a duplicate-saturated crawl makes
-    *   candidates corpus-scale. Opt-in like Reconcile.broadcastDim,
-    *   never unconditional.
-    */
-  def ngramJaccardBlocked(docs: DataFrame, threshold: Double = 0.8,
-      broadcastBlocked: Boolean = false, gramLen: Int = GramLen): DataFrame =
-    ngramJaccardFromGrams(charGramSets(docs, gramLen), threshold,
-      broadcastBlocked)
-
-  /** Per-doc sorted BIGINT-encoded char-`gramLen`-gram sets (doc_id,
-    * lang, grams)
-    * — the char-gram half of the signature store, a PURE per-document
-    * function (see [[ngramJaccardBlocked]]): each stored array element
-    * is the packed-ASCII gram code alone, sorted by VALUE, with no
-    * corpus-level statistic baked in. That purity is the store's
-    * incremental contract — `charGramSets(newDocs)` unioned onto a
-    * store persisted at any earlier time probes identically to a
-    * fresh one-shot build (pinned by SignatureStoreSpec's mixed-era
-    * case), because the corpus-coupled rarity order the prefix filter
-    * needs is re-derived by [[ngramJaccardFromGrams]] over exactly the
-    * frame being probed, never stored. Threshold-independent too:
-    * prefix lengths are derived from the stored sorted array at probe
-    * time, so ONE store serves probes at any threshold (the former
-    * length-bucket column baked `1/threshold` into the schema and tied
-    * the store to its build threshold).
-    */
-  def charGramSets(docs: DataFrame, gramLen: Int = GramLen): DataFrame = {
-    require(gramLen >= 1 && gramLen <= 7,
-      s"gram code must fit a BIGINT (127·Σ256^k < 2^63 needs gramLen ≤ 7), got $gramLen")
+  def charGramSets(docs: DataFrame): DataFrame = {
     val parallelism =
       docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // Normalize once, filter on the cheap scalar (length ≥ gramLen ⟺
+    // Normalize once, filter on the cheap scalar (length ≥ GramLen ⟺
     // grams non-empty — a filter on size(grams) would be pushed below the
     // exchange with the gram expression inlined, recreating the
     // per-element-recompute trap), round-robin repartition so the gram
     // arrays materialize once per document on all cores, THEN build grams
     // from the shuffled attribute.
     // `s` is wrapped in coalesce so the WHOLE gram chain below is
-    // non-nullable. This is load-bearing, not hygiene: the self-join's
-    // null-intolerant conditions make InferFiltersFromConstraints derive
-    // `isnotnull(grams)` for each side, and for a NULLABLE grams that
+    // non-nullable. This is load-bearing, not hygiene: null-intolerant
+    // uses downstream (a join condition, an explode) make the optimizer
+    // derive `isnotnull(grams)`, and for a NULLABLE grams that
     // filter is pushed below the repartition exchange with the transform
     // inlined — and `s` inlined into the lambda as the full normalize
     // regex, re-evaluated PER GRAM ELEMENT (O(len²) interpreted regex per
@@ -1189,7 +1142,7 @@ object Dedup {
     val base = docs
       .select(col("doc_id"), col("lang"),
         coalesce(TextOps.normalized(col("text")), lit("")).as("s"))
-      .where(length(col("s")) >= gramLen)
+      .where(length(col("s")) >= GramLen)
       .repartition(parallelism)
     // Sorted distinct grams, numerically encoded (the normalized
     // alphabet is ASCII, so an n-gram packs positionally into
@@ -1209,135 +1162,18 @@ object Dedup {
     // (no isnotnull(grams) constraint — see trap note above).
     // Positional base-256 packing, spelled as one explicit sum so the
     // multipliers are compile-time literals on both engines.
-    val packed = (0 until gramLen).map { k =>
-      val mult = (0 until (gramLen - 1 - k)).foldLeft(1L)((m, _) => m * 256L)
+    val packed = (0 until GramLen).map { k =>
+      val mult = (0 until (GramLen - 1 - k)).foldLeft(1L)((m, _) => m * 256L)
       ascii(col("s").substr(col("i") + k, lit(1))).cast("long") * lit(mult)
     }.reduce(_ + _)
     val dg = base
       .select(col("doc_id"), col("lang"), col("s"),
-        posexplode(sequence(lit(1), length(col("s")) - (gramLen - 1)))
+        posexplode(sequence(lit(1), length(col("s")) - (GramLen - 1)))
           .as(Seq("ord", "i")))
       .select(col("doc_id"), col("lang"), packed.as("gram"))
       .distinct()
     dg.groupBy("doc_id", "lang")
       .agg(array_sort(collect_set(col("gram"))).as("grams"))
-  }
-
-  /** [[ngramJaccardBlocked]] over a precomputed [[charGramSets]] frame —
-    * the signature-store probe form. The store is threshold-independent
-    * (prefix lengths derive from the stored arrays at probe time) and
-    * era-independent: the rarity order prefix filtering needs is
-    * derived HERE, over `g` itself, so a store assembled from builds at
-    * different times (base corpus + incrementally appended docs) probes
-    * identically to a one-shot build.
-    */
-  def ngramJaccardFromGrams(g: DataFrame, threshold: Double = 0.8,
-      broadcastBlocked: Boolean = false): DataFrame = {
-    val parallelism =
-      g.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // RARITY ORDER — the load-bearing half of prefix filtering
-    // (AllPairs §3: prefixes must hold the RARE end of the universe).
-    // Re-derived per probe from the probed frame: explode the stored
-    // value-sorted arrays, count document frequency per gram, and rank
-    // each doc's grams by (df, gram) with a window — each doc's prefix
-    // is its first n − ⌈t·n − ε⌉ + 1 grams under that shared total
-    // order, i.e. its RAREST grams, whose posting lists are short by
-    // definition, so the candidate join's per-gram fan-out is bounded
-    // by df of the rarest prefix grams, not by hot-gram |posting|².
-    // (A value-ordered prefix measured unboundedly worse at sf1:
-    // common grams like "e t" sit in thousands of prefixes and
-    // re-create the quadratic block.) The df table is the corpus's
-    // OCCUPIED gram set — with [[GramLen]] = 5 that set grows with the
-    // corpus (the whole point of 5-grams: see the GramLen scaladoc),
-    // so unlike the former ≤ 37³-row 3-gram table it is NOT pinned
-    // broadcast: the df join is a plain shuffle join that AQE upgrades
-    // to a runtime broadcast whenever the measured size allows (it
-    // does at every bench sf; at 100 TB the shuffle join is the only
-    // plan that cannot OOM). Deriving
-    // df at probe time (rather than baking it into the store as r11's
-    // df·2²⁴+gram element encoding did) makes the store
-    // corpus-independent: a mixed-era store (base + appended builds)
-    // cannot mix df epochs, because there is exactly one df epoch —
-    // this probe's. The r11 layout silently lost pairs on any
-    // incremental append (gram equality itself broke across eras);
-    // that hazard is now unrepresentable, pinned by
-    // SignatureStoreSpec's mixed-era case. Measured net FASTER than
-    // the baked-in layout (2.2 s vs 3.2 s fused at sf0.1): the store
-    // build drops its df join and aggregates ints instead of longs,
-    // and the probe's window rank replaces the per-doc rarity-array
-    // rebuild + re-explode.
-    val ex = g.select(col("doc_id"), col("lang"),
-      size(col("grams")).as("n"), explode(col("grams")).as("gram"))
-    val dfreq = ex.groupBy("gram").agg(count(lit(1)).as("df"))
-    // Prefix rows: one (gram, doc) posting per prefix gram, selected
-    // by per-doc rank under the probe-wide (df, gram) order. The
-    // row_number sort runs inside the window exchange — no per-doc
-    // array is rebuilt or re-exploded.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id", "lang").orderBy(col("df"), col("gram"))
-    val pfx = ex.join(dfreq, "gram")
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <=
-        (col("n") - ceil(lit(threshold) * col("n") - lit(1e-9)) + 1))
-      .select(col("doc_id"), col("lang"), col("n"), col("gram"))
-    // Candidate pairs: equi-join on the shared prefix gram with the
-    // cheap residuals in the join condition (id order; the lossless
-    // size-ratio prefilter — jaccard ≤ min/max of the set sizes, so
-    // jaccard ≥ t needs each side ≥ t × the other, nudged down 1e-9
-    // like the prefix ceil so a binary-FP product such as 0.8·55 =
-    // 44.000000000000007 cannot drop a boundary pair whose truncated
-    // jaccard still passes verification). A pair meeting at k shared
-    // prefix grams surfaces k times; the distinct() collapses it
-    // BEFORE the merge-verification pays for it.
-    // Materialized once (r18): the verification join AND the candidate-
-    // id gram semi-filter below both consume it — without the
-    // checkpoint the prefix self-join subtree would execute per
-    // consumer.
-    val cand = Ckpt.ser(pfx.as("a")
-      .join(pfx.as("b"),
-        col("a.gram") === col("b.gram") && col("a.lang") === col("b.lang") &&
-          col("a.doc_id") < col("b.doc_id") &&
-          col("a.n") >= lit(threshold) * col("b.n") - lit(1e-9) &&
-          col("b.n") >= lit(threshold) * col("a.n") - lit(1e-9))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct())
-    // Pair verification is merge-heavy per ROW while AQE's partition
-    // coalescing reasons in BYTES — a by-num repartition is exempt
-    // from coalescing, so the verification stage stays wide (the
-    // measured 17 s single-partition trap of the bucket-blocked
-    // predecessor; PLANS.md trap 6). Only on the shuffle path: under
-    // broadcastBlocked the candidate list is the build side and a
-    // repartition on it would be discarded by the broadcast exchange.
-    val candSide =
-      if (broadcastBlocked) broadcast(cand) else cand.repartition(parallelism)
-    // Join the two gram arrays back by doc_id and verify exactly. The
-    // jaccard predicate evaluates once per candidate pair — candidates
-    // are content-filtered here, so this stage is linear in the true
-    // near-dup density, not in corpus density.
-    //
-    // Gram attachment rides the [[scoredPairs]] discipline (r18): the
-    // verification inner joins only consume candidate docs' grams, so
-    // the gram table is candidate-id semi-filtered once, materialized
-    // once (both attach joins consume it), and hash-BUILT (shuffled-
-    // hash hint) so the widening candidate frame streams — a sort-merge
-    // join would external-sort the pairs-with-grams frame, tens of GB
-    // at sf100. Under broadcastBlocked the broadcast hint on the
-    // candidate side outranks the shuffle_hash hint, as before.
-    val candIds = cand.select(col("doc_a").as("doc_id"))
-      .union(cand.select(col("doc_b").as("doc_id"))).distinct()
-    val gc = Ckpt.ser(g.join(
-      if (broadcastBlocked) broadcast(candIds) else candIds,
-      Seq("doc_id"), "left_semi"))
-    val inter = SortedIntersectSize(col("ga"), col("gb"))
-    val jaccard = TextOps.trunc6(
-      inter / (size(col("ga")) + size(col("gb")) - inter).cast("double"))
-    candSide
-      .join(gc.select(col("doc_id").as("doc_a"), col("grams").as("ga"))
-        .hint("shuffle_hash"), "doc_a")
-      .join(gc.select(col("doc_id").as("doc_b"), col("grams").as("gb"))
-        .hint("shuffle_hash"), "doc_b")
-      .where(jaccard >= threshold)
-      .select(col("doc_a"), col("doc_b"), jaccard.as("jaccard"))
   }
 
   /** Signature width / band count of the char-gram MINHASH BANDING
@@ -1382,71 +1218,51 @@ object Dedup {
       posexplode(array(bandCols: _*)).as(Seq("band_idx", "band_val")))
   }
 
-  /** X4 — BANDED char-n-gram Jaccard: the SCALE PATH of the gram-
-    * Jaccard contract — candidates from [[gramMinhashBands]] collisions
-    * (same band, same lang, id order, the lossless size-ratio
-    * residual), verified by the same exact [[SortedIntersectSize]]
-    * merge over the stored gram arrays. Output: doc_a, doc_b, jaccard
-    * (truncated 6dp) — identical row shape to [[ngramJaccardBlocked]].
+  /** Gram band-collision pairs worth verifying at `threshold`: id
+    * order, same lang, and the lossless size-ratio bound — Jaccard ≤
+    * min/max of the set sizes, so Jaccard ≥ t needs each side ≥ t × the
+    * other. Both products are nudged down 1e-9 so a binary-FP product
+    * such as 0.8·55 = 44.000000000000007 cannot drop a boundary pair
+    * whose truncated Jaccard still passes verification.
+    */
+  private def gramPair(threshold: Double): (Side, Side) => Column =
+    (a, b) => selfPair(a, b) && a("lang") === b("lang") &&
+      a("n") >= lit(threshold) * b("n") - lit(1e-9) &&
+      b("n") >= lit(threshold) * a("n") - lit(1e-9)
+
+  /** X4 — BANDED char-n-gram Jaccard, the plan behind `ngram_jaccard`:
+    * candidates from [[gramMinhashBands]] collisions ([[gramPair]]),
+    * verified by [[scoredPairs]]' exact [[SortedIntersectSize]] merge
+    * over the stored gram arrays. Output: doc_a, doc_b, jaccard
+    * (truncated 6dp).
     *
-    * WHY a banded channel exists beside the lossless AllPairs one
-    * (r13, measured): prefix filtering is CONTENT-bounded — its
-    * candidate volume is Σ over prefix grams of posting², which is
-    * small exactly when most grams are rare. On a corpus with a small
-    * token vocabulary (this synthetic corpus: 31 tokens, ~2k occupied
-    * 5-grams per cipher copy, median gram df = 292 of 5,000 docs)
-    * there ARE no rare grams, and the lossless plan measured 7.6M
+    * WHY banding and not gram-sharing candidates (r13, measured): a
+    * prefix filter (AllPairs/PPJoin — Bayardo et al. WWW'07) is
+    * lossless but CONTENT-bounded — its candidate volume is Σ over
+    * prefix grams of posting², which is small exactly when most grams
+    * are rare. On a corpus with a small token vocabulary (this synthetic
+    * corpus: 31 tokens, ~2k occupied 5-grams per cipher copy, median
+    * gram df = 292 of 5,000 docs) there ARE no rare grams even with the
+    * 5-gram universe ([[GramLen]]), and the prefix plan measured 7.6M
     * candidates for 790 true pairs at sf1 — linear per decade but with
     * a ~10,000× verification overhead whose array shuffle (~50 GB+ at
-    * sf10) is the disk wall. Banding is SIMILARITY-bounded instead:
-    * a pair's candidate probability is 1 − (1 − J^r)^b regardless of
-    * how much vocabulary it shares, so background J ≈ 0.2 pairs fire
-    * at ~0.1% and candidate volume tracks the near-dup mass. The
-    * trade, documented: recall at the 0.8 threshold is ≈ 99.2% (not
-    * 100%), rising to ~1 above it — the [[nearDupMinhash]] class of
-    * contract, and the DuckDB oracle mirrors the banding exactly so
-    * the declared query stays hash-checkable. [[ngramJaccardBlocked]]
-    * remains the exact small-corpus form (property-tested lossless).
+    * sf10) is the disk wall. Banding is SIMILARITY-bounded instead: a
+    * pair's candidate probability is 1 − (1 − J^r)^b regardless of how
+    * much vocabulary it shares, so background J ≈ 0.2 pairs fire at
+    * ~0.1% and candidate volume tracks the near-dup mass. The trade,
+    * documented: recall at the 0.8 threshold is ≈ 99.2% (not 100%),
+    * rising to ~1 above it — the [[nearDupMinhash]] class of contract,
+    * and the DuckDB oracle mirrors the banding exactly so the declared
+    * query stays hash-checkable.
     */
   def ngramJaccardBanded(g: DataFrame, threshold: Double = 0.8,
       bands: Option[DataFrame] = None): DataFrame = {
-    val parallelism =
-      g.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     // A persisted gram BAND store ([[gramMinhashBands]] — "computable at
     // probe time or persisted beside it") skips the 96-permutation
     // min-aggregate, which otherwise runs on BOTH sides of the band
     // self-join every probe.
     val bd = bands.getOrElse(gramMinhashBands(g))
-    // Materialized once (r18): verification join + candidate-id gram
-    // semi-filter both consume it.
-    val cand = Ckpt.ser(bd.as("a")
-      .join(bd.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.lang") === col("b.lang") &&
-          col("a.doc_id") < col("b.doc_id") &&
-          col("a.n") >= lit(threshold) * col("b.n") - lit(1e-9) &&
-          col("b.n") >= lit(threshold) * col("a.n") - lit(1e-9))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct())
-    val inter = SortedIntersectSize(col("ga"), col("gb"))
-    val jaccard = TextOps.trunc6(
-      inter / (size(col("ga")) + size(col("gb")) - inter).cast("double"))
-    // Same verification discipline as the prefix plan: by-num
-    // repartition keeps the merge stage wide under AQE's byte-based
-    // coalescing (PLANS.md trap 6); gram attachment semi-filters the
-    // gram table to candidate ids, materializes it once, and hash-
-    // builds it so the widening pair frame streams instead of sorting
-    // (the [[scoredPairs]] r18 discipline).
-    val candIds = cand.select(col("doc_a").as("doc_id"))
-      .union(cand.select(col("doc_b").as("doc_id"))).distinct()
-    val gc = Ckpt.ser(g.join(candIds, Seq("doc_id"), "left_semi"))
-    cand.repartition(parallelism)
-      .join(gc.select(col("doc_id").as("doc_a"), col("grams").as("ga"))
-        .hint("shuffle_hash"), "doc_a")
-      .join(gc.select(col("doc_id").as("doc_b"), col("grams").as("gb"))
-        .hint("shuffle_hash"), "doc_b")
-      .where(jaccard >= threshold)
-      .select(col("doc_a"), col("doc_b"), jaccard.as("jaccard"))
+    verified(scoredPairs(bandedCandidates(bd, 0, gramPair(threshold)),
+      g.select(col("doc_id"), col("grams").as("sh"))), "jaccard", jaccard, threshold)
   }
 }

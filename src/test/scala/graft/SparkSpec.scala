@@ -14,12 +14,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = Tables.sessionDefaults.foldLeft(
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-test"))((b, kv) => b.config(kv._1, kv._2))
-    .getOrCreate()
+  lazy val session: SparkSession = Session.local(4)
 }

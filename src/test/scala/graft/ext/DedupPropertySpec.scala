@@ -58,36 +58,6 @@ class DedupPropertySpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
-  test("ngramJaccardBlocked ≡ naive all-pairs (the blocking is lossless)") {
-    // Unlike the LSH families, prefix filtering claims ZERO recall
-    // loss at the threshold — so exact set equality with a naive
-    // all-pairs computation is the right property (char-GramLen-grams,
-    // the declared contract).
-    def grams(words: List[String]): Set[String] = {
-      val s = words.mkString(" ")
-      if (s.length < Dedup.GramLen) Set.empty else s.sliding(Dedup.GramLen).toSet
-    }
-    val prop = Prop.forAll(corpusGen) { docs0 =>
-      val docs = docs0 :+ (docs0.head :+ "tok1") // force ≥1 high-J pair
-      val df = docs.zipWithIndex
-        .map { case (ws, i) => (i.toLong, ws.mkString(" "), "en") }
-        .toDF("doc_id", "text", "lang")
-      val out = Dedup.ngramJaccardBlocked(df).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val sets = docs.map(grams)
-      val expected = (for {
-        i <- docs.indices; j <- (i + 1) until docs.length
-        if sets(i).nonEmpty && sets(j).nonEmpty
-        inter = sets(i).intersect(sets(j)).size
-        jac = inter.toDouble / (sets(i).size + sets(j).size - inter)
-        if math.floor(jac * 1e6) / 1e6 >= 0.8
-      } yield (i.toLong, j.toLong, math.floor(jac * 1e6) / 1e6)).toSet
-      out == expected
-    }
-    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
-    assert(res.passed, res.status.toString)
-  }
-
   test("ngramJaccardBanded is sound (⊆ exact) and finds planted near-identical pairs") {
     // The banded channel trades ~0.8% recall at the threshold for
     // similarity-bounded candidates (Dedup.ngramJaccardBanded): so the
