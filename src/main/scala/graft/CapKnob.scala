@@ -2,7 +2,7 @@ package graft
 
 import graft.ext.Dedup
 
-/** Measures the banded channel's occupancy caps (CellKnob pattern),
+/** Measures the banded channel's occupancy caps,
   * r14 edition: the three declared pair queries' plans with
   * maxBandOccupancy ∈ {0 (unbounded), 64 (declared)} on each dataset —
   * count() materialization over a pre-materialized signature store, so

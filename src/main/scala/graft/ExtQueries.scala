@@ -288,10 +288,6 @@ object ExtQueries {
         s"(h % ${Dedup.Prime} * $a + $b) % ${Dedup.Prime} % 4096 AS cms_bucket FROM $src"
     }.mkString("\n  UNION ALL\n")
 
-  /** DuckDB mirror of the per-probe cosine (double accumulation, index
-    * order, floor-truncated 6dp) — matches graft.functions
-    * .CosineSimilarity wrapped in TextOps.trunc6.
-    */
   /** Brute-force probe top-k oracle — shared by ann_topk and sql_topk
     * (identical result contract, different Spark entry paths).
     */
@@ -305,6 +301,10 @@ object ExtQueries {
        |SELECT probe_id, rank, neighbor_id, cosine FROM r
        |WHERE rank <= 5 ORDER BY probe_id, rank""".stripMargin
 
+  /** DuckDB mirror of the per-probe cosine (double accumulation, index
+    * order, floor-truncated 6dp) — matches graft.functions
+    * .DotProduct.cosine wrapped in TextOps.trunc6.
+    */
   private[graft] val cosSql =
     """floor((
       |  list_sum(list_transform(range(1, len(a.embedding) + 1),
@@ -394,7 +394,7 @@ object ExtQueries {
        |  FROM cs GROUP BY label)""".stripMargin
 
   /** Truncated cosine between `e.embedding` and the centroid list `cen`
-    * (index order, float→double casts — the CosineSimilarity kernel).
+    * (index order, float→double casts — DotProduct.cosine's arithmetic).
     */
   private[graft] val cosCenSql: String =
     """floor(

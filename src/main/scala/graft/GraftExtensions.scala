@@ -5,10 +5,11 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graft.Bridge
 
-import graft.functions.{CosineSimilarity, SortedIntersectSize}
+import graft.functions.{DotProduct, SortedIntersectSize}
 
 /** `SparkSessionExtensions` injection point: makes graft's custom
-  * Catalyst expressions available as SQL functions, so
+  * Catalyst expressions (and the cosine composed of them) available as
+  * SQL functions, so
   * `spark.sql("SELECT cosine_similarity(a, b) ...")` works the same as
   * the Column API.
   *
@@ -41,9 +42,11 @@ object GraftExtensions {
 
   val descriptors: Seq[Descriptor] = Seq(
     binary("cosine_similarity",
-      "cosine_similarity(array<float>, array<float>) - fused single-pass " +
-        "dot product + norms cosine similarity (codegen'd)")(
-      CosineSimilarity(_, _)),
+      "cosine_similarity(array<float>, array<float>) - dot(a, b) / " +
+        "(‖a‖·‖b‖) over the codegen'd dot_product kernel; NULL on a zero " +
+        "norm, a length mismatch or a null element")(
+      (a, b) => Bridge.sqlExpression(
+        DotProduct.cosine(Bridge.column(a), Bridge.column(b)))),
     binary("sorted_intersect_size",
       "sorted_intersect_size(array, array) - |A ∩ B| of two sorted " +
         "duplicate-free arrays via a codegen'd two-pointer merge")(

@@ -5,14 +5,15 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ext.Ckpt.SerCkptOps
 
-import graft.functions.{CosineSimilarity, DotProduct, TopKByScore}
+import graft.functions.{DotProduct, TopKByScore}
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2.11 X3):
   * approximate-nearest-neighbor top-k and embedding-cosine near-dup.
   *
-  * The cosine kernel is the custom codegen'd Catalyst expression
-  * `graft.functions.CosineSimilarity` — one fused loop for dot product
-  * and both norms instead of three higher-order-function passes.
+  * Every cosine is `graft.functions.DotProduct.cosine`: the codegen'd
+  * `DotProduct` kernel over per-vector norms, one loop per dot instead
+  * of three higher-order-function passes. Pair joins and routing passes
+  * compute each norm once per vector ([[withNorm]]), not once per pair.
   *
   * Scale design (100 TB of vectors):
   *  - `topKBruteForce` broadcasts the probe set against the full corpus —
@@ -34,31 +35,38 @@ import graft.functions.{CosineSimilarity, DotProduct, TopKByScore}
   */
 object Similarity {
 
-  /** Truncated cosine similarity (floor, 6dp) over PRECOMPUTED norms —
-    * truncation makes ranking ties deterministic across engines so
-    * results are oracle-comparable (floor, not round: TextOps.trunc6).
+  /** Truncated cosine similarity (floor, 6dp) of the pair `a`/`b` over
+    * PRECOMPUTED norms — truncation makes ranking ties deterministic
+    * across engines so results are oracle-comparable (floor, not round:
+    * TextOps.trunc6).
     *
-    * Every pair-scoring join in this file scores `Σ pairs` cosines, and
-    * the fused [[CosineSimilarity]] kernel spends two thirds of its
-    * loop re-accumulating the two vector norms PER PAIR even though a
-    * vector's norm never changes. [[withNorm]] computes `nrm =
-    * sqrt(dot(v, v))` once per vector (the same `xi*xi` index-order
-    * double accumulation the fused loop used), and pairs score as
-    * `dot(a, b) / (nrm_a * nrm_b)` — bit-identical to
-    * `CosineSimilarity(a, b)` (same dot, same sqrt·sqrt denominator,
-    * same division, same `denom == 0 → null` and null-element/length
-    * guards via [[DotProduct]]'s null propagation), at one third of the
-    * per-pair flops. Pinned by SimilaritySpec's norm-equivalence test.
+    * Every pair-scoring join in this file scores `Σ pairs` cosines while
+    * a vector's norm never changes: [[withNorm]] computes it once per
+    * vector, so the pair loop accumulates only the dot. The arithmetic
+    * is the oracle's (index-order double dot, sqrt·sqrt, one division,
+    * zero denominator → null); DotProductSpec pins it bitwise against
+    * Spark's higher-order-function formulation.
     */
-  private def cosPre6: Column = {
-    val denom = col("a.nrm") * col("b.nrm")
-    TextOps.trunc6(when(denom === 0d, lit(null).cast("double"))
-      .otherwise(DotProduct(col("a.embedding"), col("b.embedding")) / denom))
-  }
+  private def cosPre6: Column = TextOps.trunc6(DotProduct.cosine(
+    col("a.embedding"), col("a.nrm"), col("b.embedding"), col("b.nrm")))
 
-  /** Carry each vector's norm beside it for [[cosPre6]] pair scoring. */
-  private def withNorm(e: DataFrame): DataFrame =
-    e.withColumn("nrm", sqrt(DotProduct(col("embedding"), col("embedding"))))
+  /** Carry the norm of vector column `v` beside it as `as`, for
+    * [[cosPre6]] pair scoring and the nearest-centroid routing passes.
+    */
+  private def withNorm(e: DataFrame, v: String = "embedding",
+      as: String = "nrm"): DataFrame =
+    e.withColumn(as, DotProduct.norm(col(v)))
+
+  /** Routing cosine of a [[withNorm]] vector (`v`, `nrm`) against a
+    * centroid (`c`, `c_nrm`) whose norm was taken on the broadcast
+    * centroid frame — |cells| norms, not one per (vector, cell) row.
+    */
+  private def routeCos(v: String, c: String): Column =
+    DotProduct.cosine(col(v), col("nrm"), col(c), col("c_nrm"))
+
+  /** A centroid frame with each centroid's norm beside it as `c_nrm`. */
+  private def withCentroidNorm(cent: DataFrame, c: String = "centroid"): DataFrame =
+    withNorm(cent, c, "c_nrm")
 
   /** Per-probe top-k via the bounded [[TopKByScore]] aggregate, not a
     * window rank: the aggregate's map-side partial keeps ≤ k rows per
@@ -195,7 +203,7 @@ object Similarity {
           col("embedding").as("n_emb")), "neighbor_id")
         .join(broadcast(pr), "probe_id")
         .select(col("probe_id"), col("neighbor_id"),
-          TextOps.trunc6(CosineSimilarity(col("p_emb"), col("n_emb"))).as("cosine")),
+          TextOps.trunc6(DotProduct.cosine(col("p_emb"), col("n_emb"))).as("cosine")),
       k)
   }
 
@@ -269,23 +277,9 @@ object Similarity {
       .select(col("label"), col("dim").cast("long").as("dim"), col("n_vecs"),
         TextOps.trunc6(col("sx").cast("double") / col("n_vecs")).as("centroid_val"))
 
-  /** Per-label cluster cohesion: each vector's cosine to its label
-    * centroid (assembled from [[labelCentroids]], cast to float so the
-    * codegen'd [[CosineSimilarity]] kernel applies), aggregated to the
-    * label's member count, mean and minimum cosine — the cluster-quality
-    * gate run after any reclustering, and the assign-score of one k-means
-    * step. Output: label, n_vecs, avg_cos, min_cos.
-    *
-    * The centroid table is |labels|·dims rows — broadcast by
-    * construction, never corpus-sized. The mean cosine uses the same
-    * exact-decimal trick as [[labelCentroids]] (cosines are 6dp-truncated
-    * first, so the 10dp decimal cast is exact on both engines); min needs
-    * no such care. One aggregate on label after a map-side broadcast
-    * join: the corpus contributes a single scan.
-    */
   /** Per-cell float-array centroids of an arbitrary `(cell, embedding)`
     * frame — the [[labelCentroids]] aggregation (exact-decimal sums,
-    * trunc6, dim-sorted assembly, float cast so the [[CosineSimilarity]]
+    * trunc6, dim-sorted assembly, float cast so the [[DotProduct]]
     * kernel applies) generalized over any cell assignment, which is what
     * lets the k-means loop re-derive centroids from ITS OWN assignments
     * instead of the static label column. |cells| rows, broadcast by
@@ -337,14 +331,28 @@ object Similarity {
       .join(n(0, "n_even"), "label")
       .join(n(1, "n_odd"), "label")
       .select(col("label"), col("n_even"), col("n_odd"),
-        TextOps.trunc6(CosineSimilarity(col("cen_a"), col("cen_b"))).as("shift_cos"))
+        TextOps.trunc6(DotProduct.cosine(col("cen_a"), col("cen_b"))).as("shift_cos"))
   }
 
+  /** Per-label cluster cohesion: each vector's cosine to its label
+    * centroid (assembled from [[labelCentroids]], cast to float so the
+    * codegen'd [[DotProduct]] kernel applies), aggregated to the
+    * label's member count, mean and minimum cosine — the cluster-quality
+    * gate run after any reclustering, and the assign-score of one k-means
+    * step. Output: label, n_vecs, avg_cos, min_cos.
+    *
+    * The centroid table is |labels|·dims rows — broadcast by
+    * construction, never corpus-sized. The mean cosine uses the same
+    * exact-decimal trick as [[labelCentroids]] (cosines are 6dp-truncated
+    * first, so the 10dp decimal cast is exact on both engines); min needs
+    * no such care. One aggregate on label after a map-side broadcast
+    * join: the corpus contributes a single scan.
+    */
   def labelCohesion(embeddings: DataFrame): DataFrame = {
     val cent = centroidTable(embeddings, "label")
     embeddings.join(broadcast(cent), "label")
       .select(col("label"),
-        TextOps.trunc6(CosineSimilarity(col("embedding"), col("centroid"))).as("cos_c"))
+        TextOps.trunc6(DotProduct.cosine(col("embedding"), col("centroid"))).as("cos_c"))
       .groupBy("label")
       .agg(count(lit(1)).as("n_vecs"),
         sum(col("cos_c").cast("decimal(20,10)")).as("sc"),
@@ -375,11 +383,10 @@ object Similarity {
     * narrow-row exchange, the standard distributed k-means assignment.
     */
   def kmeansAssign(embeddings: DataFrame): DataFrame = {
-    val cent = centroidTable(embeddings, "c_label")
-    embeddings.crossJoin(broadcast(cent))
+    val cent = withCentroidNorm(centroidTable(embeddings, "c_label"))
+    withNorm(embeddings).crossJoin(broadcast(cent))
       .select(col("vec_id"), col("label"),
-        argmaxKey(CosineSimilarity(col("embedding"), col("centroid")),
-          col("c_label")).as("k"))
+        argmaxKey(routeCos("embedding", "centroid"), col("c_label")).as("k"))
       .groupBy("vec_id", "label")
       .agg(max(col("k")).as("k"))
       .select(col("vec_id"), col("label"), keyCell(col("k")).as("new_label"),
@@ -419,8 +426,8 @@ object Similarity {
     * scale the IVF design point is cells ∝ n (occupancy ≈ constant,
     * n/|cells|): pass `numCells > 0` to seed from `vec_id mod numCells`
     * instead (equally deterministic and oracle-unrollable — the seed is
-    * pure integer arithmetic). Measured (graft.CellKnob, BASELINE.md
-    * r12 "ANN cell-count knob" section): with occupancy pinned at ~200
+    * pure integer arithmetic). Measured (BASELINE.md r12 "ANN
+    * cell-count knob" section): with occupancy pinned at ~200
     * (cells = n/200), knn_join costs 0.40 / 0.81 / 3.10 s at
     * sf0.1 / sf1 / sf10 — 2.0× then 3.8× per 10× of corpus, i.e.
     * sublinear-to-linear — where the pinned-10-cells run measured
@@ -531,10 +538,10 @@ object Similarity {
           cent.join(grouping, "c_cell")
             .select(col("cell"), col("centroid").as("embedding")),
           "g_cell").withColumnRenamed("centroid", "g_centroid")
-        grouping = cent.crossJoin(broadcast(cc))
+        grouping = withNorm(cent, "centroid")
+          .crossJoin(broadcast(withCentroidNorm(cc, "g_centroid")))
           .select(col("c_cell"),
-            argmaxKey(CosineSimilarity(col("centroid"), col("g_centroid")),
-              col("g_cell")).as("k"))
+            argmaxKey(routeCos("centroid", "g_centroid"), col("g_cell")).as("k"))
           .groupBy("c_cell").agg(max(col("k")).as("k"))
           .select(col("c_cell"), keyCell(col("k")).as("cell"))
       }
@@ -554,9 +561,9 @@ object Similarity {
           // ordering every other argmax in the family uses — which is
           // what lets the DuckDB oracle unroll this build verbatim
           // (ExtQueries.kmeansCoarseCtes).
-          embeddings.crossJoin(broadcast(coarseCent))
+          withNorm(embeddings).crossJoin(broadcast(withCentroidNorm(coarseCent, "g_centroid")))
             .select(col("vec_id"),
-              floor(CosineSimilarity(col("embedding"), col("g_centroid")) * 1000000)
+              floor(routeCos("embedding", "g_centroid") * 1000000)
                 .cast("double").as("gcos"),
               col("g_cell"))
             .groupBy("vec_id")
@@ -566,11 +573,10 @@ object Similarity {
             .select(col("vec_id"), col("__g").cast("int").as("g_cell"))
       val centByGroup = cent.join(
         grouping.select(col("c_cell"), col("cell").as("g_cell")), "c_cell")
-      assign = embeddings.join(routed, "vec_id")
-        .join(broadcast(centByGroup), "g_cell")
+      assign = withNorm(embeddings).join(routed, "vec_id")
+        .join(broadcast(withCentroidNorm(centByGroup)), "g_cell")
         .select(col("vec_id"),
-          argmaxKey(CosineSimilarity(col("embedding"), col("centroid")),
-            col("c_cell")).as("k"))
+          argmaxKey(routeCos("embedding", "centroid"), col("c_cell")).as("k"))
         .groupBy("vec_id")
         .agg(max(col("k")).as("k"))
         .select(col("vec_id"), keyCell(col("k")).as("cell"))
@@ -601,10 +607,9 @@ object Similarity {
       // round's found-at-third-decade plan defect. (max_by is NOT the
       // fix: its struct buffer forces SortAggregate, which re-sorts the
       // same cross product — thread-dumped mid-spill on the retry.)
-      assign = embeddings.crossJoin(broadcast(cent))
+      assign = withNorm(embeddings).crossJoin(broadcast(withCentroidNorm(cent)))
         .select(col("vec_id"),
-          argmaxKey(CosineSimilarity(col("embedding"), col("centroid")),
-            col("c_cell")).as("k"))
+          argmaxKey(routeCos("embedding", "centroid"), col("c_cell")).as("k"))
         .groupBy("vec_id")
         .agg(max(col("k")).as("k"))
         .select(col("vec_id"), keyCell(col("k")).as("cell"))
@@ -840,10 +845,10 @@ object Similarity {
     * Output: vec_id, cell.
     */
   def assignCells(vectors: DataFrame, centroids: DataFrame): DataFrame =
-    vectors.crossJoin(broadcast(centroids.select(col("cell"), col("centroid"))))
+    withNorm(vectors)
+      .crossJoin(broadcast(withCentroidNorm(centroids.select(col("cell"), col("centroid")))))
       .select(col("vec_id"),
-        argmaxKey(CosineSimilarity(col("embedding"), col("centroid")),
-          col("cell")).as("k"))
+        argmaxKey(routeCos("embedding", "centroid"), col("cell")).as("k"))
       .groupBy("vec_id")
       .agg(max(col("k")).as("k"))
       .select(col("vec_id"), keyCell(col("k")).as("cell"))
@@ -882,7 +887,7 @@ object Similarity {
   /** X3 — cosine top-k over the QUANTIZED store: the search reads only
     * `(vec_id, scale, qvec)` — the 4×-smaller memory-resident form at
     * scale — reconstructing each component as `q·scale` narrowed to
-    * float so the same codegen'd [[CosineSimilarity]] kernel (and the
+    * float so the same codegen'd [[DotProduct]] kernel (and the
     * whole [[topKBruteForce]] plan) applies unchanged. `store` is the
     * persisted [[quantizeEmbeddings]] table; when absent the store is
     * derived in-query and localCheckpoint'ed — materialization is not
@@ -927,7 +932,7 @@ object Similarity {
       .join(probes(embeddings, probeEvery).select(col("vec_id").as("probe_id"),
         col("embedding").as("p_emb")), "probe_id")
       .select(col("probe_id"), col("neighbor_id"),
-        TextOps.trunc6(CosineSimilarity(col("p_emb"), col("n_emb"))).as("cosine"))
+        TextOps.trunc6(DotProduct.cosine(col("p_emb"), col("n_emb"))).as("cosine"))
     topK(exact, k)
   }
 
@@ -961,7 +966,7 @@ object Similarity {
     val w = Window.partitionBy("vec_id").orderBy(col("cos").desc, col("cell"))
     val probeCells = pr.crossJoin(broadcast(cent.select(col("cell"), col("centroid"))))
       .select(col("vec_id"), col("cell"),
-        TextOps.trunc6(CosineSimilarity(col("embedding"), col("centroid"))).as("cos"))
+        TextOps.trunc6(DotProduct.cosine(col("embedding"), col("centroid"))).as("cos"))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= nprobe)
       .select(col("vec_id").as("probe_id"), col("cell"))
@@ -1034,7 +1039,7 @@ object Similarity {
       .crossJoin(broadcast(benchmark.select(col("vec_id").as("bench_id"),
         col("embedding").as("b_emb"))))
       .select(col("a.vec_id").as("vec_id"), col("bench_id"),
-        TextOps.trunc6(CosineSimilarity(col("a.embedding"), col("b_emb"))).as("cos"))
+        TextOps.trunc6(DotProduct.cosine(col("a.embedding"), col("b_emb"))).as("cos"))
       .where(col("cos") >= threshold)
     // One aggregate instead of a count window + rank window over the
     // hit set: n_hits, max_cos and the argmax bench id come from the

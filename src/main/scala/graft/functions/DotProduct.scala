@@ -5,30 +5,22 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.{lit, sqrt, when}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** Native dot product over two `array<float>` columns — the pair-volume
-  * half of [[CosineSimilarity]] split out so the norms can be
-  * precomputed ONCE PER VECTOR instead of once per pair.
-  *
-  * In a cell-scoped pair join (Σ|cell|² pairs), [[CosineSimilarity]]
-  * spends two thirds of its fused loop re-accumulating ‖a‖² and ‖b‖²
-  * for every pair even though each vector's norm never changes. Scoring
-  * pairs as `DotProduct(a, b) / (nrm_a * nrm_b)` with `nrm = sqrt(
-  * DotProduct(v, v))` carried beside the vector is BIT-IDENTICAL to
-  * `CosineSimilarity(a, b)`: the dot accumulates the same doubles in
-  * the same index order, `DotProduct(v, v)` accumulates exactly the
-  * `xi*xi` sequence the fused loop used for its norm accumulator, and
-  * `sqrt(na) * sqrt(nb)` / the final division are the same scalar ops —
-  * only WHERE the norm is computed moves (per vector, not per pair).
-  * Null semantics also match: null input, length mismatch, or a null
-  * element yield null (so a null `nrm` propagates exactly where the
-  * fused kernel returned null), and the caller re-instates the fused
-  * kernel's `denominator == 0 → null` guard (see Similarity.cosPre6).
+/** Native dot product over two `array<float>` columns — graft's one
+  * vector kernel. Every cosine in the tree is [[DotProduct.cosine]]:
+  * `DotProduct(a, b) / (‖a‖ · ‖b‖)` with `‖v‖ = sqrt(DotProduct(v, v))`
+  * ([[DotProduct.norm]]), so a norm can be computed ONCE PER VECTOR and
+  * carried beside it instead of being re-accumulated for every pair —
+  * in a cell-scoped pair join (Σ|cell|² pairs) the pair loop then does
+  * one accumulation instead of three.
   *
   * Accumulation is in double, element order is index order — matching
-  * the DuckDB oracle formulation, like [[CosineSimilarity]].
+  * the DuckDB oracle formulation `list_sum(list_transform(range(...),
+  * i -> a[i]::DOUBLE * b[i]::DOUBLE))` so results compare bit-for-bit.
+  * Null input, a length mismatch, or a null element yield null.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -93,4 +85,23 @@ object DotProduct {
   /** Column-API entry point: `DotProduct(col("a"), col("b"))`. */
   def apply(a: Column, b: Column): Column =
     Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
+
+  /** Euclidean norm `sqrt(DotProduct(v, v))`: null where `v` is null or
+    * holds a null element.
+    */
+  def norm(v: Column): Column = sqrt(DotProduct(v, v))
+
+  /** Cosine similarity of `a` and `b` over their norms `na` and `nb`
+    * (each [[norm]] of its vector, computed wherever it is cheapest):
+    * `DotProduct(a, b) / (na * nb)`, null when `na * nb` is zero (no ANSI
+    * `DIVIDE_BY_ZERO`), when the lengths differ or when an element is
+    * null (the dot is null).
+    */
+  def cosine(a: Column, na: Column, b: Column, nb: Column): Column = {
+    val denom = na * nb
+    when(denom === 0d, lit(null).cast("double")).otherwise(DotProduct(a, b) / denom)
+  }
+
+  /** [[cosine]] with both norms computed inline, for one-shot scores. */
+  def cosine(a: Column, b: Column): Column = cosine(a, norm(a), b, norm(b))
 }

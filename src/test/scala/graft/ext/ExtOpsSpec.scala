@@ -3,7 +3,8 @@ package graft.ext
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.functions.CosineSimilarity
+import graft.functions.DotProduct
+import graft.functions.DotProductSpec.hofCosine
 
 /** Extension-operator specs on tiny literal frames. */
 class ExtOpsSpec extends SparkSpec {
@@ -89,34 +90,28 @@ class ExtOpsSpec extends SparkSpec {
     assert(out.forall(_.getBoolean(3)))
   }
 
-  test("CosineSimilarity expression matches a hand-computed value and handles edge cases") {
+  test("DotProduct.cosine matches a hand-computed value and handles edge cases") {
     val df = Seq(
       (1L, Array(1.0f, 0.0f), Array(0.0f, 1.0f)),   // orthogonal → 0
       (2L, Array(1.0f, 2.0f), Array(2.0f, 4.0f)),   // parallel → 1
       (3L, Array(0.0f, 0.0f), Array(1.0f, 1.0f)))   // zero norm → null
       .toDF("id", "a", "b")
-    val out = df.select(col("id"), CosineSimilarity(col("a"), col("b")).as("c"))
+    val out = df.select(col("id"), DotProduct.cosine(col("a"), col("b")).as("c"))
       .orderBy("id").collect()
     assert(math.abs(out(0).getDouble(1)) < 1e-12)
     assert(math.abs(out(1).getDouble(1) - 1.0) < 1e-12)
     assert(out(2).isNullAt(1))
   }
 
-  test("CosineSimilarity agrees with the HOF formulation on real embeddings") {
+  test("DotProduct.cosine is bitwise equal to the HOF formulation on real embeddings") {
     val e = graft.Tables.embeddings(spark, "/root/testdata/sf0.001").limit(50)
-    val hof =
-      """aggregate(zip_with(a, b, (x, y) -> cast(x AS double) * cast(y AS double)),
-        |  cast(0 AS double), (acc, v) -> acc + v) /
-        |(sqrt(aggregate(a, cast(0 AS double), (acc, x) -> acc + cast(x AS double) * cast(x AS double))) *
-        | sqrt(aggregate(b, cast(0 AS double), (acc, x) -> acc + cast(x AS double) * cast(x AS double))))"""
-        .stripMargin
     val pairs = e.select(col("vec_id").as("ia"), col("embedding").as("a"))
       .crossJoin(e.select(col("vec_id").as("ib"), col("embedding").as("b")))
       .where(col("ia") < col("ib"))
-    val diff = pairs
-      .select(abs(CosineSimilarity(col("a"), col("b")) - expr(hof)).as("d"))
-      .agg(max("d")).collect().head.getDouble(0)
-    assert(diff < 1e-12)
+      .select(DotProduct.cosine(col("a"), col("b")).as("dot"), hofCosine("a", "b").as("hof"))
+    assert(pairs.count() > 0L)
+    assert(pairs.where(col("dot").isNull).count() === 0L)
+    assert(pairs.where(!(col("dot") <=> col("hof"))).count() === 0L)
   }
 
   test("ANN top-k returns k ranked neighbors per probe, IVF restricted to the cell") {
@@ -162,7 +157,7 @@ class ExtOpsSpec extends SparkSpec {
       .join(e.as("b"),
         col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        TextOps.trunc6(CosineSimilarity(col("a.embedding"), col("b.embedding")))
+        TextOps.trunc6(hofCosine("a.embedding", "b.embedding"))
           .as("cosine"))
       .where(col("cosine") >= 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -182,7 +177,7 @@ class ExtOpsSpec extends SparkSpec {
       .join(e2.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        TextOps.trunc6(CosineSimilarity(col("a.embedding"), col("b.embedding")))
+        TextOps.trunc6(hofCosine("a.embedding", "b.embedding"))
           .as("cosine"))
       .where(col("cosine") >= 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet

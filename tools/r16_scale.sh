@@ -19,9 +19,6 @@
 # Stage 5  sf100 ANN family, FOUR passes (ask #5: adjudicate
 #          hard_negatives_scaled's 18.8x/decade as noise or plan — the
 #          r15 recording was 2-pass with spread 69.9/75.4).
-# Stage 6  sf100 IVF store build: flat vs coarse-routed Lloyd (ask #4;
-#          r15 measured the flat build at ~646 s for 3 assignment
-#          passes = 20B cosines).
 set -e
 set -o pipefail
 cd /root/repo
@@ -62,9 +59,5 @@ SPARK_GRAFT_BENCH_ONLY="knn_join_scaled,hard_negatives_scaled,semantic_dedup_sca
 SPARK_GRAFT_STORE_DIR=/root/repo/scale-data/stores_sf100 \
 SPARK_GRAFT_BENCH_FULL=/root/repo/tools/r16_runs/sf100_ann.json \
   sbt -batch "runMain graft.Bench" 2>&1 | tail -2
-
-echo "== stage 6: sf100 IVF build — flat vs coarse-routed =="
-sbt -batch "runMain graft.IvfBuild /root/repo/scale-data/sf100" 2>&1 \
-  | grep IVFBUILD | tee /root/repo/tools/r16_runs/ivfbuild_sf100.txt
 
 echo "done"

@@ -1,10 +1,6 @@
 #!/bin/bash
 # Round-17 scale campaign (VERDICT r16 asks #1/#2/#3/#5):
 #
-# Stage 1  sf100 IVF store build re-record, flat vs coarse-routed —
-#          the coarse form now carries the FLOORED routing score (the
-#          oracle-portable ordering) and is the DECLARED ingest path,
-#          so the r16 numbers re-record on the shipped code.
 # Stage 2  sf100 ANN family, 4 passes, disk stores rebuilt COLD at
 #          FormatVersion 2 (coarse-built cells): pass 1 = ingest,
 #          steady = min of passes 2-4. ann_store_replay is the
@@ -23,10 +19,6 @@ cd /root/repo
 mkdir -p tools/r17_runs
 
 SKIP_SF10="interval_join,knn_join,hard_negatives,semantic_dedup"
-
-echo "== stage 1: sf100 IVF build — flat vs coarse-routed (floored) =="
-sbt -batch "runMain graft.IvfBuild /root/repo/scale-data/sf100" 2>&1 \
-  | grep IVFBUILD | tee /root/repo/tools/r17_runs/ivfbuild_sf100.txt
 
 echo "== stage 2: sf100 ANN family (4 passes, COLD v2 disk stores) =="
 rm -rf /root/repo/scale-data/stores_sf100
