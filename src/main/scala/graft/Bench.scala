@@ -49,43 +49,24 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
-    // Cumulative executor task time (ms), fed by a listener: the stderr
-    // diagnostic line carries task-time beside wall per sample (r18,
-    // VERDICT r17 ask #1) so serial floors are self-evident — a query
-    // whose summed task seconds ≈ wall seconds is pinned by per-job
-    // fixed costs (planning, codegen, scheduling), not by compute, and
-    // no core count can move it; task/wall ≫ 1 is the parallel work
-    // that c8-vs-c32 ratios CAN move. Polling happens after the wall
-    // sample is recorded, so the timed region is unchanged, as is the
-    // stdout JSON contract.
-    val taskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) taskMs.addAndGet(m.executorRunTime)
-      }
-    })
-    def drainedTaskMs(): Long = {
-      // The listener bus is async; settle until two 5 ms polls agree
-      // (100 ms cap — a diagnostic must never stall the bench).
-      var prev = -1L; var cur = taskMs.get(); var waited = 0
-      while (cur != prev && waited < 100) {
-        Thread.sleep(5); waited += 5; prev = cur; cur = taskMs.get()
-      }
-      cur
-    }
+    // Task seconds, jobs, stages and tasks per sample go to stderr beside
+    // the wall: task ≈ wall means per-job fixed costs pin the query, not
+    // compute, so no core count can move it. They are read after the wall
+    // sample, so the timed region and the stdout JSON are unchanged.
+    val collector = new ProfileCollector(spark)
     for (pass <- 1 to passes; name <- names) {
-      val task0 = drainedTaskMs()
+      val before = collector.snapshot()
       val t0 = System.nanoTime()
       try {
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         val t = (System.nanoTime() - t0) / 1e9
         samples(name) = t :: samples(name)
-        val taskSec = (drainedTaskMs() - task0) / 1e3
+        val c = collector.snapshot() - before
         // Per-sample diagnostics go to stderr so stdout carries exactly
         // one [info] line — the JSON the driver parses.
-        System.err.println(f"bench pass $pass $name $t%.2f task=$taskSec%.2f")
+        System.err.println(f"bench pass $pass $name $t%.2f task=${c.taskMs / 1e3}%.2f " +
+          s"jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks}")
       } catch { case e: Throwable =>
         errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
       }
@@ -97,7 +78,10 @@ object Bench {
       // (ENOSPC during containment_stratified, r15 campaign). On a
       // cluster each executor's shuffle dirs get the same treatment
       // from the periodic-GC cleaner; a bench harness can't wait 30
-      // minutes for it.
+      // minutes for it. The collector lets go of the finished query's
+      // executions, so it pins none of its shuffle files.
+      collector.snapshot()
+      collector.takeExecutions()
       System.gc()
     }
     // Every pass threw → 0.0 with the errors entry carrying the cause

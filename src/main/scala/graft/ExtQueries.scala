@@ -592,8 +592,8 @@ object ExtQueries {
     * to the capped band-channel APIs of [[Dedup]], and the oracle twins
     * mirror it through [[cappedBandCte]]. 64 = the probe_near_dups /
     * containment_stratified precedent (r13: 225.8 → 74.1 s at sf10 with
-    * identical output); the CapKnob adjudication for the pair channel
-    * itself is recorded in BASELINE.md r14.
+    * identical output); the cap's recall adjudication for the pair
+    * channel itself is recorded in BASELINE.md r14.
     */
   private[graft] val BandCap = 64
 

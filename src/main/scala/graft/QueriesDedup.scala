@@ -90,7 +90,7 @@ private[graft] object QueriesDedup {
     // (≤ 64 docs per (sig_idx, sig_val) bucket — the probe_near_dups
     // hot-band trade; oracle mirrors it): saturated min-shingle
     // buckets are pure noise candidates on a dense corpus, measured
-    // 225.8 → 74.1 s at sf10 with IDENTICAL output (CapKnob, r13).
+    // 225.8 → 74.1 s at sf10 with IDENTICAL output (BASELINE.md r13).
     "containment_stratified" -> ((s, dir) =>
       Dedup.containmentNearDupStratifiedFromHashes(minhashStore(s, dir),
         bands = Some(minhashBandsStore(s, dir)),
@@ -107,11 +107,12 @@ private[graft] object QueriesDedup {
     // zero recall trade — VERDICT r15 #6) vs `live` (pays occ² pairs).
     // Per class: bucket count, row mass, Σ occ² (the candidate-volume
     // driver) and max occupancy. THE capacity-planning read before a
-    // dedup run at a new corpus scale: r17's StratProfile computed
-    // exactly this census ad hoc to attribute the sf100 residual
-    // (1.36M live buckets, Σ occ² 667M); now it is declared and
-    // oracle-checked. One aggregate over the sig-row store — the
-    // same single exchange the skew channel itself shuffles on.
+    // dedup run at a new corpus scale: r17 computed exactly this
+    // census ad hoc to attribute the sf100 residual (1.36M live
+    // buckets, Σ occ² 667M; BASELINE.md r17 stage 4); now it is
+    // declared and oracle-checked. One aggregate over the sig-row
+    // store — the same single exchange the skew channel itself
+    // shuffles on.
     "dedup_bucket_census" -> ((s, dir) => {
       val sized = minhashSigRowsStore(s, dir)
       sized.groupBy("sig_idx", "sig_val")

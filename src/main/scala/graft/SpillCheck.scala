@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** SPILL-REGIME correctness evidence (VERDICT r9 "Next round" #4): sf0.1
@@ -60,16 +59,9 @@ object SpillCheck {
     val spilly = Session.local(8)
     spilly.conf.set("spark.sql.shuffle.partitions", 4)
     spilly.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 2)
-    @volatile var memSpilled = 0L
-    @volatile var diskSpilled = 0L
-    spilly.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        Option(t.taskMetrics).foreach { m =>
-          memSpilled += m.memoryBytesSpilled
-          diskSpilled += m.diskBytesSpilled
-        }
-    })
+    val collector = new ProfileCollector(spilly)
     val under = targets.map(n => n -> fingerprint(spilly, n)).toMap
+    val ExecCounts(_, _, _, _, memSpilled, diskSpilled) = collector.snapshot()
     val diverged = targets.filter(n => base(n) != under(n))
     println(s"""{"check":"spill","queries":${targets.length},"diverged":${diverged.length},"mem_spilled_bytes":$memSpilled,"disk_spilled_bytes":$diskSpilled,"diverged_names":${diverged.mkString("[\"", "\",\"", "\"]").replace("[\"\"]", "[]")}}""")
     spilly.stop()

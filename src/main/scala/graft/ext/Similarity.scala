@@ -57,14 +57,17 @@ object Similarity {
       as: String = "nrm"): DataFrame =
     e.withColumn(as, DotProduct.norm(col(v)))
 
-  /** Routing cosine of a [[withNorm]] vector (`v`, `nrm`) against a
-    * centroid (`c`, `c_nrm`) whose norm was taken on the broadcast
-    * centroid frame — |cells| norms, not one per (vector, cell) row.
+  /** Cosine of a [[withNorm]] vector (`v`, `nrm`) against a centroid or
+    * other broadcast-side vector (`c`, `c_nrm`) whose norm was taken on
+    * the broadcast frame — one norm per broadcast row, not one per
+    * (vector, broadcast row) pair.
     */
   private def routeCos(v: String, c: String): Column =
     DotProduct.cosine(col(v), col("nrm"), col(c), col("c_nrm"))
 
-  /** A centroid frame with each centroid's norm beside it as `c_nrm`. */
+  /** A centroid (or other broadcast-side) frame with each vector's norm
+    * beside it as `c_nrm`.
+    */
   private def withCentroidNorm(cent: DataFrame, c: String = "centroid"): DataFrame =
     withNorm(cent, c, "c_nrm")
 
@@ -964,9 +967,10 @@ object Similarity {
     // Rank cells per probe by centroid cosine (deterministic smaller-cell
     // tie-break, the kmeans convention), keep the nprobe best.
     val w = Window.partitionBy("vec_id").orderBy(col("cos").desc, col("cell"))
-    val probeCells = pr.crossJoin(broadcast(cent.select(col("cell"), col("centroid"))))
+    val probeCells = withNorm(pr)
+      .crossJoin(broadcast(withCentroidNorm(cent.select(col("cell"), col("centroid")))))
       .select(col("vec_id"), col("cell"),
-        TextOps.trunc6(DotProduct.cosine(col("embedding"), col("centroid"))).as("cos"))
+        TextOps.trunc6(routeCos("embedding", "centroid")).as("cos"))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= nprobe)
       .select(col("vec_id").as("probe_id"), col("cell"))
@@ -1035,11 +1039,11 @@ object Similarity {
     */
   def decontaminateEmbeddings(corpus: DataFrame, benchmark: DataFrame,
       threshold: Double = 0.9): DataFrame = {
-    val hits = corpus.as("a")
-      .crossJoin(broadcast(benchmark.select(col("vec_id").as("bench_id"),
-        col("embedding").as("b_emb"))))
+    val hits = withNorm(corpus).as("a")
+      .crossJoin(broadcast(withCentroidNorm(benchmark.select(col("vec_id").as("bench_id"),
+        col("embedding").as("b_emb")), "b_emb")))
       .select(col("a.vec_id").as("vec_id"), col("bench_id"),
-        TextOps.trunc6(DotProduct.cosine(col("a.embedding"), col("b_emb"))).as("cos"))
+        TextOps.trunc6(routeCos("a.embedding", "b_emb")).as("cos"))
       .where(col("cos") >= threshold)
     // One aggregate instead of a count window + rank window over the
     // hit set: n_hits, max_cos and the argmax bench id come from the

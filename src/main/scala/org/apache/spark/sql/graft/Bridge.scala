@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -12,7 +13,8 @@ import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, Expression
   * .ExpressionUtils`). This bridge re-exports the conversions from a
   * `sql` subpackage — the standard pattern for libraries that ship
   * native expressions without a session extension — plus live-session
-  * function registration (`sessionState` is likewise `private[sql]`).
+  * function registration (`sessionState` is likewise `private[sql]`)
+  * and a listener-bus drain (the bus is `private[spark]`).
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -33,4 +35,10 @@ object Bridge {
       info: ExpressionInfo, builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(id, info, builder)
+
+  /** Block until the listener bus has delivered every event posted so
+    * far, or `timeoutMs` passes (then a `TimeoutException`).
+    */
+  def drainListenerBus(sc: SparkContext, timeoutMs: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
 }

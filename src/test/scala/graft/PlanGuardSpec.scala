@@ -294,4 +294,23 @@ class PlanGuardSpec extends SparkSpec {
         s"declaring $q with warm stores started jobs: $started")
     }
   }
+
+  test("global windows are exactly the 13 bounded sites of the PLANS.md census") {
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    // PLANS.md "Global-window census": a window with no partition spec
+    // runs in one task, so each listed site is over a bounded,
+    // post-aggregate frame. A new site must be judged and listed there.
+    // The census reads each declaration's optimized logical plan, with
+    // subqueries: a physical walk stops at the adaptive-plan wrapper.
+    val expected = Map("rfm_segments" -> 3, "customer_deciles" -> 1,
+      "interval_count" -> 1, "interval_topk" -> 1, "session_quantiles" -> 2,
+      "orders_backlog" -> 1, "orders_mom_growth" -> 1, "collocations" -> 1,
+      "copurchase_pairs" -> 1, "supplier_concentration" -> 1)
+    val found = SparkEntry.queries.toSeq.map { case (name, q) =>
+      name -> q(spark, dir).queryExecution.optimizedPlan.collectWithSubqueries {
+        case w: Window if w.partitionSpec.isEmpty => w
+      }.size
+    }.filter(_._2 > 0).toMap
+    assert(found === expected)
+  }
 }
