@@ -1,7 +1,12 @@
 package graft
 
+import scala.collection.mutable
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet testdata (TESTDATA.md).
   * One parquet file per table under `dir` (an sf directory).
@@ -11,8 +16,45 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** `name`'s table. Its parquet schema is inferred (one Spark job) on the
+    * first read in a session and reused while the table's files — each
+    * one's name, size and modification time — and the session's parquet
+    * read settings stay the same; any change infers again.
+    */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val id = identity(spark, path)
+    val known = inferred.synchronized {
+      Option(inferred.get(spark)).flatMap(_.get(path)).collect { case (i, s) if id.contains(i) => s }
+    }
+    known.fold {
+      val df = spark.read.parquet(path)
+      id.foreach(i => inferred.synchronized {
+        inferred.computeIfAbsent(spark, _ => mutable.Map.empty).update(path, i -> df.schema)
+      })
+      df
+    }(spark.read.schema(_).parquet(path))
+  }
+
+  private final case class Identity(files: Seq[(String, Long, Long)], conf: Seq[(String, String)])
+
+  /** Per session: path → the identity its schema was inferred under. */
+  private val inferred =
+    new java.util.WeakHashMap[SparkSession, mutable.Map[String, (Identity, StructType)]]()
+
+  /** None when the path cannot be listed; the read then reports why. */
+  private def identity(spark: SparkSession, path: String): Option[Identity] = Try {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // listStatus, not listFiles: the latter also looks up block locations.
+    def under(p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.flatMap(f => if (f.isDirectory) under(f.getPath) else Seq(f))
+    val files = under(p).map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+    val conf = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.toSeq.sorted
+    Identity(files, conf)
+  }.toOption
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "orders")

@@ -5,6 +5,8 @@ import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.ext.Ckpt
+
 /** In-process orchestrator replacing the reference's Airflow DAG
   * (dags/retail_pipeline_dag.py:65-100; SURVEY.md §3.3).
   *
@@ -17,6 +19,11 @@ import org.apache.spark.sql.functions.col
   * unrelated writes later in the same SparkSession.
   */
 object Pipeline {
+
+  /** The warehouse tables [[run]] loads. */
+  val SalesTable = "fact_daily_sales"
+  val DimTable = "dim_products"
+  val ReconTable = "fact_inventory_reconciliation"
 
   final case class Result(
       stagedSalesPath: String,
@@ -50,17 +57,16 @@ object Pipeline {
       rawInventoryClose: DataFrame,
       date: LocalDate,
       sink: WarehouseSink): Result = {
-    val salesTable = "fact_daily_sales"
-    val dimTable = "dim_products"
-    val reconTable = "fact_inventory_reconciliation"
-
     // Job 1 — stage sales (K1/K3: overwrite exactly this date's rows).
     val staged = StageSales.stage(rawSales, date)
-    sink.loadFact(staged, salesTable, date)
+    sink.loadFact(staged, SalesTable, date)
+
+    // The dim job and the reconcile share one evaluation of the closing
+    // snapshot. Checkpoint, not persist(): PLANS.md trap 10.
+    val close = Ckpt.ser(rawInventoryClose)
 
     // Dim job — full refresh (K4).
-    val dim = DimProducts.build(rawInventoryClose)
-    sink.loadDim(dim, dimTable)
+    sink.loadDim(DimProducts.build(close), DimTable)
 
     // Job 2 — reconcile (reads back the staged outputs like the reference
     // reads its staging zone, glue_job_2_reconcile.py:50,74).
@@ -68,20 +74,20 @@ object Pipeline {
       .select(
         StageSales.normalizeSku(col("sku")).as("sku"),
         col("stock_on_hand").cast("long").as("opening_stock"))
-    val closingStock = rawInventoryClose
+    val closingStock = close
       .select(
         StageSales.normalizeSku(col("sku")).as("sku"),
         col("stock_on_hand").cast("long").as("actual_closing_stock"))
-    val sales = sink.read(spark, salesTable)
+    val sales = sink.read(spark, SalesTable)
       .where(col("date_key") === date.toString)
       .select("sku", "total_quantity_sold")
-    val dimRead = sink.read(spark, dimTable)
+    val dimRead = sink.read(spark, DimTable)
 
     // Dim read-back is a bounded single file (coalesce(1) above) → safe to
     // hint broadcast, matching the reference's DISTSTYLE ALL intent.
     val recon = Reconcile.reconcile(
       openingStock, closingStock, sales, dimRead, date, broadcastDim = true)
-    sink.loadFact(recon, reconTable, date)
+    sink.loadFact(recon, ReconTable, date)
 
     // Alert actions run on the written fact (read-back, not a 3rd recompute
     // of the join tree — fixes the reference's triple replay, SURVEY.md
@@ -89,9 +95,9 @@ object Pipeline {
     // on the current processing date (glue_job_2_reconcile.py:118-133), and
     // the date_key filter is a partition-pruned read, not a full-fact scan.
     val alert = Alerts.build(
-      sink.read(spark, reconTable).where(col("date_key") === date.toString))
-    Result(sink.location(salesTable), sink.location(dimTable),
-      sink.location(reconTable), alert)
+      sink.read(spark, ReconTable).where(col("date_key") === date.toString))
+    Result(sink.location(SalesTable), sink.location(DimTable),
+      sink.location(ReconTable), alert)
   }
 
   /** Calendar replay: the reference DAG is triggered once per

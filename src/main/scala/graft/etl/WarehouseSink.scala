@@ -6,6 +6,8 @@ import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.schemas.Schemas
+
 /** Warehouse load contract — the typed seam for the reference's Redshift
   * loads (dags/retail_pipeline_dag.py:19-41: DELETE-by-date + COPY for
   * facts, TRUNCATE + COPY for dims; sql/create_redshift_tables.sql:4-38).
@@ -55,8 +57,29 @@ final class ParquetWarehouseSink(root: String) extends WarehouseSink {
   override def loadDim(df: DataFrame, table: String): Unit =
     df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(location(table))
 
+  /** Tables of known layout read with their pinned schema, which starts
+    * no schema-inference job (SURVEY.md §7.4); other tables infer.
+    */
   override def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(location(table))
+    ParquetWarehouseSink.readSchemas.get(table)
+      .fold(spark.read)(spark.read.schema(_))
+      .parquet(location(table))
+}
+
+object ParquetWarehouseSink {
+
+  /** What `spark.read.parquet` infers for each table [[Pipeline.run]]
+    * writes: every column nullable, the `date_key` partition column last.
+    */
+  private[etl] val readSchemas: Map[String, StructType] = Map(
+    Pipeline.SalesTable -> asRead(Schemas.stagedSales, "date_key"),
+    Pipeline.DimTable -> asRead(Schemas.dimProducts),
+    Pipeline.ReconTable -> asRead(Schemas.reconciliation, "date_key"))
+
+  private def asRead(written: StructType, partitionCols: String*): StructType = {
+    val (parts, data) = written.fields.partition(f => partitionCols.contains(f.name))
+    StructType((data ++ parts).map(_.copy(nullable = true)))
+  }
 }
 
 /** JDBC binding: the reference's ACTUAL warehouse-load semantics

@@ -59,6 +59,41 @@ class TablesSpec extends SparkSpec {
     assert(got === "2024-03-15 10:30:45.123456")
   }
 
+  /** Spark jobs that `f` starts. */
+  private def jobsOf[A](f: => A): Long = {
+    val collector = new ProfileCollector(spark)
+    try {
+      val before = collector.snapshot()
+      f
+      (collector.snapshot() - before).jobs
+    } finally collector.close()
+  }
+
+  test("apply: a repeat read of an unchanged table starts no Spark job") {
+    val d = dir("graft-tbl-repeat")
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$d/t.parquet")
+    assert(jobsOf(Tables(spark, d, "t")) >= 1L, "the first read infers the schema")
+    assert(jobsOf(Tables(spark, d, "t")) === 0L)
+    assert(Tables(spark, d, "t").as[(Long, String)].collect().toSeq === Seq((1L, "a")))
+  }
+
+  test("apply: a table rewritten with other columns is read with its new schema") {
+    val d = dir("graft-tbl-rewrite")
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$d/t.parquet")
+    assert(Tables(spark, d, "t").columns.toSeq === Seq("k", "v"))
+    Seq((2L, 0.5, true)).toDF("k", "w", "x").write.mode("overwrite").parquet(s"$d/t.parquet")
+    val out = Tables(spark, d, "t")
+    assert(out.columns.toSeq === Seq("k", "w", "x"))
+    assert(out.as[(Long, Double, Boolean)].collect().toSeq === Seq((2L, 0.5, true)))
+  }
+
+  test("apply: a second session infers the schema again") {
+    val d = dir("graft-tbl-session")
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$d/t.parquet")
+    Tables(spark, d, "t")
+    assert(jobsOf(Tables(spark.newSession(), d, "t")) >= 1L)
+  }
+
   test("events: loader handles the live testdata schema") {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     if (Files.exists(java.nio.file.Paths.get(s"$sfDir/events.parquet"))) {

@@ -52,6 +52,36 @@ class PipelineSpec extends SparkSpec {
     assert(alert.examples.head.contains("SKU: B2"))
   }
 
+  test("one run evaluates the closing snapshot once (dim and reconcile share it)") {
+    // The dim job and the reconcile both read the closing snapshot; each
+    // row must be evaluated once per run, not once per consumer.
+    val evals = spark.sparkContext.longAccumulator("invClose rows")
+    val counted = org.apache.spark.sql.functions.udf { (_: String) =>
+      evals.add(1L); true
+    }.asNondeterministic()
+    val root = Files.createTempDirectory("graft-pipe-once").toString
+    val res = Pipeline.run(spark, sales, invOpen, invClose.where(counted(col("sku"))), d1, root)
+    assert(evals.value === 2L)
+    assert(spark.read.parquet(res.dimProductsPath).count() === 2)
+    assert(res.alert.get.count === 1)
+  }
+
+  test("warehouse read contract: pinned read schemas equal what parquet infers") {
+    // ParquetWarehouseSink reads Pipeline's tables with pinned schemas; they
+    // must equal the schema the written files infer, nullability included.
+    val root = Files.createTempDirectory("graft-pipe-schema").toString
+    val sink = new ParquetWarehouseSink(root)
+    Pipeline.run(spark, sales, invOpen, invClose, d1, sink)
+    val tables = Seq(Pipeline.SalesTable, Pipeline.DimTable, Pipeline.ReconTable)
+    assert(ParquetWarehouseSink.readSchemas.keySet === tables.toSet)
+    for (t <- tables) {
+      val pinned = sink.read(spark, t)
+      val inferred = spark.read.parquet(sink.location(t))
+      assert(pinned.schema === inferred.schema, t)
+      assert(pinned.exceptAll(inferred).isEmpty && inferred.exceptAll(pinned).isEmpty, t)
+    }
+  }
+
   test("re-running the same date is idempotent (dynamic partition overwrite)") {
     val root = Files.createTempDirectory("graft-pipe").toString
     Pipeline.run(spark, sales, invOpen, invClose, d1, root)
